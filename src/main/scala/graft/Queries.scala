@@ -18,8 +18,8 @@ object Queries {
   // ---------------------------------------------------------------- entry
 
   /** Flagship: full Readability span extraction over a deterministic
-    * synthetic interleaved corpus (salted repartition → typed
-    * mapPartitions → per-doc span sequences).
+    * synthetic interleaved corpus (scan-aligned mapPartitions with the
+    * oversize gate → per-doc span sequences).
     */
   def extractDocuments(spark: SparkSession, sfDir: String): DataFrame =
     x1_extract(spark, sfDir)

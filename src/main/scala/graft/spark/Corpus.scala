@@ -10,7 +10,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * comment noise (unlikely-candidate classes), an article body of
   * paragraphs with commas/links, inline media spans, sometimes a data
   * table; sizes are log-normal-ish with a configurable oversize tail to
-  * exercise the skew salting.
+  * exercise the pipeline's oversize gate.
   */
 object Corpus {
 

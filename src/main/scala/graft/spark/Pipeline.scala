@@ -6,23 +6,26 @@ import org.apache.spark.sql.functions._
 /** Distributed extraction skeleton (SURVEY.md §2.0):
   *
   * {{{
-  * scan → salted repartition (skew-aware) → mapPartitions(extract) → sink
-  *                                        ↘ per-partition lineage/metrics
+  * scan → mapPartitions(per-doc kernel + oversize gate) → sink
+  *                                                      ↘ lineage sidecar (from the committed sink)
   * }}}
   *
-  * Everything is Dataset/DataFrame API; the per-doc pipeline is a typed
-  * mapPartitions (SURVEY.md §7.3: no UDF — one object pipeline per task,
-  * no Row↔case-class churn, metrics for free). Catalyst prunes the scan to
-  * (doc_id, spans); the only shuffle is the explicit salt.
+  * One extraction path: the map runs aligned with the scan's partitions
+  * (no shuffle, no second pass; Catalyst prunes the scan to
+  * (doc_id, spans)) and every document goes through one per-doc kernel
+  * that batch and streaming share. The per-doc step is a mapPartitions
+  * below the row abstraction (SURVEY.md §7.3: no UDF — one object
+  * pipeline per task, no Row↔case-class churn, metrics for free).
   *
   * Scale design notes (100 TB / 10^12 docs):
-  *   - salt = pmod(xxhash64(doc_id), S) with S ≈ 2–4× total cores spreads
-  *     hash-skew; doc cost is ~linear in span bytes, so additionally the
-  *     oversize tail (> oversizeBytes of span payload) is routed to
-  *     dedicated salts so one 8 MB page never serializes behind thousands
-  *     of small ones (north-rule skew requirement).
-  *   - map-side work dominates; AQE coalescing applies to the metrics aggs.
-  *   - per-partition lineage rows make restarts resumable via anti-join
+  *   - skew is handled inside the map: doc cost is ~linear in span count,
+  *     so a doc with more than `oversizeSpans` spans takes a permit of a
+  *     per-executor gate; at most `oversizePartitions` giants are in flight
+  *     per JVM, so one 8 MB page never floods an executor heap while the
+  *     small docs of the other tasks keep flowing.
+  *   - per-document failures become status/error columns, never task
+  *     failures.
+  *   - lineage rows keyed by [[Lineage.partKey]] make restarts resumable
   *     (see [[Lineage.resumeFilter]]).
   */
 object Pipeline {
@@ -30,15 +33,10 @@ object Pipeline {
   final case class Config(
       baseUrl: String = "https://corpus.example/doc.html",
       charThreshold: Int = 500,
-      nSalts: Int = 128,
-      /** html-char threshold above which a doc is treated as oversize
-        * (salted-shuffle strategy only)
-        */
-      oversizeBytes: Int = 1 << 20,
-      /** span-count threshold for the scan-aligned oversize split: cheap
-        * codegen'd `size(spans)` proxy for document work (~linear in
-        * spans for interleaved corpora), evaluated before any typed
-        * deserialization so each row is assembled exactly once
+      /** span-count threshold above which a doc takes the oversize gate:
+        * a cheap proxy for document work (~linear in spans for interleaved
+        * corpora), read before any span is touched so each doc is
+        * assembled exactly once
         */
       oversizeSpans: Int = 256,
       /** hard cap: skip docs above this many HTML chars (0 = off) */
@@ -48,9 +46,7 @@ object Pipeline {
         * snapshot + clone), so unbounded concurrency turns into GC
         * pressure that stalls the small-doc tasks too
         */
-      oversizePartitions: Int = 16,
-      /** full salted shuffle instead of scan-aligned + oversize split */
-      saltedShuffle: Boolean = false)
+      oversizePartitions: Int = 16)
 
   /** Observability for the skew path: how many docs took the oversize
     * route and how long they waited on the per-executor gate. Spark
@@ -63,7 +59,11 @@ object Pipeline {
       nOversize: org.apache.spark.util.LongAccumulator,
       gateWaitMs: org.apache.spark.util.LongAccumulator)
 
-  /** Extraction plan (scan-aligned by default):
+  private def newStats(spark: SparkSession): ExtractStats = ExtractStats(
+    spark.sparkContext.longAccumulator("graft.extract.oversize_docs"),
+    spark.sparkContext.longAccumulator("graft.extract.gate_wait_ms"))
+
+  /** Extraction plan:
     *
     *   - ONE scan of the corpus, map-only — no shuffle, no second pass
     *   - spans→html assembly happens below the row abstraction (single
@@ -71,9 +71,8 @@ object Pipeline {
     *     interpreted, not codegen'd, and measured 10× slower here)
     *   - oversize docs are rare but 100–1000× the work: a per-executor
     *     gate bounds how many are in flight per JVM so giant pages don't
-    *     flood executor heaps (explicit skew handling — the earlier
-    *     filter/union design bought the same bound with a full second
-    *     corpus scan)
+    *     flood executor heaps (explicit skew handling without a second
+    *     corpus scan or a shuffle)
     */
   def extract(docs: Dataset[Doc], cfg: Config = Config())(implicit spark: SparkSession): Dataset[ExtractedDoc] =
     extractWithStats(docs, cfg)._1
@@ -82,127 +81,102 @@ object Pipeline {
     * must be observable, not just present: a corpus whose giant tail
     * saturates the gate shows up as gate-wait time here long before it
     * shows up as a straggling stage.
+    *
+    * Decode + assemble + extract in one pass over the scan's InternalRows:
+    * span text bytes are appended to ONE UTF-8 buffer and decoded to a
+    * String once per document. The product-encoder path materialized a
+    * SpanIn case class + String per span before concatenating — measured
+    * as ~half the 32-core pipeline cost (the extraction itself being the
+    * other half). This is the documented mapPartitions-as-last-resort
+    * case: per-partition imperative logic below the row abstraction; the
+    * plan above it (scan, pruning) stays Catalyst.
     */
   def extractWithStats(docs: Dataset[Doc], cfg: Config = Config())(
       implicit spark: SparkSession): (Dataset[ExtractedDoc], ExtractStats) = {
     import spark.implicits._
     val opts = graft.algo.Options(charThreshold = cfg.charThreshold)
-    val stats = ExtractStats(
-      spark.sparkContext.longAccumulator("graft.extract.oversize_docs"),
-      spark.sparkContext.longAccumulator("graft.extract.gate_wait_ms"))
-
-    /** Decode + assemble + extract in one pass over the scan's InternalRows:
-      * span text bytes are appended to ONE UTF-8 buffer and decoded to a
-      * String once per document. The product-encoder path materialized a
-      * SpanIn case class + String per span before concatenating — measured
-      * as ~half the 32-core pipeline cost (the extraction itself being the
-      * other half). This is the documented mapPartitions-as-last-resort
-      * case: per-partition imperative logic below the row abstraction; the
-      * plan above it (scan, pruning, split) stays Catalyst.
-      */
-    def run(ds: Dataset[Doc]): Dataset[ExtractedDoc] = {
-      val df = ds.toDF().select(col("doc_id"), col("spans"))
-      val spanType = df.schema("spans").dataType
-        .asInstanceOf[org.apache.spark.sql.types.ArrayType]
-        .elementType.asInstanceOf[org.apache.spark.sql.types.StructType]
-      val kindIdx = spanType.fieldIndex("kind")
-      val textIdx = spanType.fieldIndex("text")
-      val refIdx = spanType.fieldIndex("media_ref")
-      val offIdx = spanType.fieldIndex("offset")
-      val nFields = spanType.length
-      val oversizeSpans = cfg.oversizeSpans
-      val oversizePermits = cfg.oversizePartitions
-      val rdd = df.queryExecution.toRdd.mapPartitions { it =>
-        it.map { row =>
-          // null ids flow through as null (poison-row discipline: a bad
-          // row must never NPE a task)
-          val idU = row.getUTF8String(0)
-          val docId = if (idU == null) null else idU.toString
-          val arr = row.getArray(1)
-          val big = arr.numElements() > oversizeSpans
-          def go(): ExtractedDoc = {
-            // sound early skip BEFORE assembling a giant buffer: UTF-16
-            // length ≥ utf8Bytes/3, so bytes > 3×charLimit guarantees the
-            // post-assembly char check would skip too
-            if (cfg.maxHtmlChars > 0 && big) {
-              val bytes = Spans.spanTextBytes(arr, nFields, textIdx)
-              if (bytes > 3L * cfg.maxHtmlChars)
-                return Spans.oversizeSkipped(docId, s"span_text_bytes=$bytes")
-            }
-            val html = Spans.assembleHtmlFromRow(arr, nFields,
-              kindIdx, textIdx, refIdx, offIdx)
-            Spans.extractFromHtml(docId, html, cfg.baseUrl, opts, cfg.maxHtmlChars)
-          }
-          if (!big) go()
-          else {
-            // explicit skew handling WITHOUT a second corpus scan or a
-            // shuffle: oversize docs (~0.1%, but each a multi-hundred-MB
-            // working set) are throttled by a per-executor gate so at most
-            // `oversizePartitions` giants are in flight per JVM — the
-            // earlier filter/union design paid a full second scan of the
-            // corpus for the same bound
-            stats.nOversize.add(1)
-            val gate = Pipeline.oversizeGate(oversizePermits)
-            val t0 = System.nanoTime()
-            gate.acquire()
-            stats.gateWaitMs.add((System.nanoTime() - t0) / 1000000L)
-            try go() finally gate.release()
-          }
-        }
+    val stats = newStats(spark)
+    val df = docs.toDF().select(col("doc_id"), col("spans"))
+    val spanType = df.schema("spans").dataType
+      .asInstanceOf[org.apache.spark.sql.types.ArrayType]
+      .elementType.asInstanceOf[org.apache.spark.sql.types.StructType]
+    val kindIdx = spanType.fieldIndex("kind")
+    val textIdx = spanType.fieldIndex("text")
+    val refIdx = spanType.fieldIndex("media_ref")
+    val offIdx = spanType.fieldIndex("offset")
+    val nFields = spanType.length
+    type Arr = org.apache.spark.sql.catalyst.util.ArrayData
+    val textBytes = (arr: Arr) => Spans.spanTextBytes(arr, nFields, textIdx)
+    val assemble = (arr: Arr) =>
+      Spans.assembleHtmlFromRow(arr, nFields, kindIdx, textIdx, refIdx, offIdx)
+    val rdd = df.queryExecution.toRdd.mapPartitions { it =>
+      it.map { row =>
+        val docId = if (row.isNullAt(0)) null else row.getUTF8String(0).toString
+        val arr = if (row.isNullAt(1)) NoSpans else row.getArray(1)
+        extractDoc(docId, arr, arr.numElements(), textBytes, assemble, cfg, opts, stats)
       }
-      spark.createDataset(rdd)
     }
-
-    if (cfg.saltedShuffle) {
-      val prepared: Dataset[(String, String)] =
-        docs.map(d => (d.doc_id, Spans.assembleHtml(d.spans)))
-      val oversizeSalts = math.max(cfg.nSalts / 8, 4)
-      val salted = prepared
-        .withColumn("salt",
-          when(length(col("_2")) > cfg.oversizeBytes,
-            lit(cfg.nSalts) + pmod(xxhash64(col("_1")), lit(oversizeSalts)))
-            .otherwise(pmod(xxhash64(col("_1")), lit(cfg.nSalts))))
-        .repartition(col("salt"))
-        .select(col("_1"), col("_2")).as[(String, String)]
-      val ds = salted.mapPartitions { it =>
-        it.map { case (id, html) =>
-          if (html != null && html.length > cfg.oversizeBytes) stats.nOversize.add(1)
-          Spans.extractFromHtml(id, html, cfg.baseUrl, opts, cfg.maxHtmlChars)
-        }
-      }
-      (ds, stats)
-    } else {
-      // single scan, map-only; oversize docs are gated inside the map
-      (run(docs), stats)
-    }
+    (spark.createDataset(rdd), stats)
   }
 
-  /** Structured Streaming twin of [[extract]] — IDENTICAL per-doc
-    * semantics, incremental execution: `readStream` source →
-    * `extractStreaming` → `writeStream` sink. A streaming Dataset has no
-    * `queryExecution.toRdd` handle (the plan is incremental), so this path
-    * assembles through the typed layer instead of the batch path's
-    * InternalRow hot loop; the per-executor oversize gate applies inside
-    * each micro-batch exactly as in batch. Equality with the batch result
-    * on the same docs is asserted in OpsSpec.
+  /** What a null `spans` column reads as: zero spans. */
+  private val NoSpans = new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
+
+  /** Structured Streaming twin of [[extract]]: `readStream` source →
+    * `extractStreaming` → `writeStream` sink, through the same per-doc
+    * kernel. A streaming Dataset has no `queryExecution.toRdd` handle (the
+    * plan is incremental), so this path reads typed [[Doc]]s instead of
+    * the batch path's InternalRows; the result rows equal the batch ones
+    * on the same docs (asserted in OpsSpec).
     */
   def extractStreaming(docs: Dataset[Doc], cfg: Config = Config())(
       implicit spark: SparkSession): Dataset[ExtractedDoc] = {
     import spark.implicits._
     val opts = graft.algo.Options(charThreshold = cfg.charThreshold)
-    docs.mapPartitions { it =>
-      it.map { d =>
-        val spans = if (d.spans == null) Nil else d.spans
-        val big = spans.length > cfg.oversizeSpans
-        def go(): ExtractedDoc = Spans.extractFromHtml(d.doc_id,
-          Spans.assembleHtml(spans), cfg.baseUrl, opts, cfg.maxHtmlChars)
-        if (!big) go()
-        else {
-          val gate = Pipeline.oversizeGate(cfg.oversizePartitions)
-          gate.acquire()
-          try go() finally gate.release()
-        }
+    val stats = newStats(spark)
+    // the UTF-8 byte count a scan row holds for the same spans
+    val textBytes = (spans: Seq[SpanIn]) => spans.iterator.map(s =>
+      if (s.text == null) 0L
+      else s.text.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong).sum
+    val assemble = (spans: Seq[SpanIn]) => Spans.assembleHtml(spans)
+    docs.mapPartitions(_.map { d =>
+      val spans = if (d.spans == null) Nil else d.spans
+      extractDoc(d.doc_id, spans, spans.length, textBytes, assemble, cfg, opts, stats)
+    })
+  }
+
+  /** The per-document kernel of both paths, which differ only in how
+    * they read a row's spans (`S`; both read a null span list as zero
+    * spans). Never throws: a null id flows through as null (poison-row
+    * discipline: a bad row must never kill a task).
+    *
+    * A doc above `oversizeSpans` spans is a giant: it takes a permit of
+    * the per-executor gate before any work, and is skipped before its
+    * HTML is assembled when its span text alone proves it too long.
+    */
+  private def extractDoc[S](docId: String, spans: S, nSpans: Int,
+      textBytes: S => Long, assemble: S => String,
+      cfg: Config, opts: graft.algo.Options, stats: ExtractStats): ExtractedDoc = {
+    val big = nSpans > cfg.oversizeSpans
+    def go(): ExtractedDoc = {
+      // sound early skip BEFORE assembling a giant buffer: UTF-16
+      // length ≥ utf8Bytes/3, so bytes > 3×charLimit guarantees the
+      // post-assembly char check would skip too
+      if (cfg.maxHtmlChars > 0 && big) {
+        val bytes = textBytes(spans)
+        if (bytes > 3L * cfg.maxHtmlChars)
+          return Spans.oversizeSkipped(docId, s"span_text_bytes=$bytes")
       }
+      Spans.extractFromHtml(docId, assemble(spans), cfg.baseUrl, opts, cfg.maxHtmlChars)
+    }
+    if (!big) go()
+    else {
+      stats.nOversize.add(1)
+      val gate = oversizeGate(cfg.oversizePartitions)
+      val t0 = System.nanoTime()
+      gate.acquire()
+      stats.gateWaitMs.add((System.nanoTime() - t0) / 1000000L)
+      try go() finally gate.release()
     }
   }
 

@@ -207,36 +207,29 @@ object Spans {
     out.result()
   }
 
-  /** Run the full extraction on one doc. Never throws — poison rows yield
-    * status/error columns (a bad row must not kill a 10^12-doc job).
+  /** Run the full extraction on one doc's HTML. Never throws — poison rows
+    * yield status/error columns (a bad row must not kill a 10^12-doc job).
     */
-  def extractOne(doc: Doc, baseUrl: String, opts: graft.algo.Options,
-      maxHtmlBytes: Int = 0): ExtractedDoc =
-    extractFromHtml(doc.doc_id, assembleHtml(doc.spans), baseUrl, opts, maxHtmlBytes)
-
   def extractFromHtml(docId: String, html: String, baseUrl: String,
       opts: graft.algo.Options, maxHtmlBytes: Int = 0): ExtractedDoc = {
-    val doc = Doc(docId, Nil) // id carrier for error paths
     try {
-      if (maxHtmlBytes > 0 && html != null && html.length > maxHtmlBytes) {
-        return ExtractedDoc(doc.doc_id, Nil, null, null, null, null, null, null, null,
-          0, "oversize_skipped", s"html_chars=${html.length}")
-      }
+      if (maxHtmlBytes > 0 && html != null && html.length > maxHtmlBytes)
+        return oversizeSkipped(docId, s"html_chars=${html.length}")
       graft.algo.Readability.parse(html, baseUrl, opts) match {
         case graft.algo.Readability.Ok(r) =>
           val spans = r.spans.zipWithIndex.map { case (s, i) =>
             SpanOut(s.kind, s.text, s.mediaRef, i)
           }
-          ExtractedDoc(doc.doc_id, spans, r.title, r.byline.orNull, r.dir.orNull,
+          ExtractedDoc(docId, spans, r.title, r.byline.orNull, r.dir.orNull,
             r.lang.orNull, r.excerpt.orNull, r.siteName.orNull,
             r.publishedTime.orNull, r.length, "ok", null)
         case graft.algo.Readability.Failed(status, error) =>
-          ExtractedDoc(doc.doc_id, Nil, null, null, null, null, null, null, null,
+          ExtractedDoc(docId, Nil, null, null, null, null, null, null, null,
             0, status, error)
       }
     } catch {
       case e: Throwable =>
-        ExtractedDoc(doc.doc_id, Nil, null, null, null, null, null, null, null,
+        ExtractedDoc(docId, Nil, null, null, null, null, null, null, null,
           0, "error", String.valueOf(e).take(500))
     }
   }

@@ -861,23 +861,32 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val docs = Corpus.generate(spark, 10, nPartitions = 2).collect()
-    val batch = Pipeline.extract(Corpus.generate(spark, 10, nPartitions = 2))
-      .collect().map(d => d.doc_id -> (d.status, d.title, d.spans)).toMap
-    val mem = MemoryStream[Doc]
-    val q = Pipeline.extractStreaming(mem.toDS())
-      .writeStream.format("memory").queryName("x_stream")
-      .outputMode("append").start()
-    mem.addData(docs.take(4): _*)
-    q.processAllAvailable()
-    assert(s.sql("select * from x_stream").count() == 4)
-    mem.addData(docs.drop(4): _*) // second micro-batch: incremental
-    q.processAllAvailable()
-    val streamed = s.table("x_stream").as[ExtractedDoc].collect()
-      .map(d => d.doc_id -> (d.status, d.title, d.spans)).toMap
-    q.stop()
-    assert(streamed.keySet == batch.keySet)
-    assert(streamed == batch, "streaming extraction diverged from the batch pipeline")
+    // a 20-span page of 6,140 text bytes: under `small` it takes the
+    // oversize gate and the pre-assembly skip; the null-spans row must
+    // count as zero spans on both paths
+    val giant = Doc("giant", (0 until 20).map(i =>
+      SpanIn("text", "<p>" + ("y" * 300) + "</p>", null, i)))
+    val docs = Corpus.generate(spark, 10, nPartitions = 2).collect().toSeq ++
+      Seq(giant, Doc("no_spans", null))
+    val small = Pipeline.Config(maxHtmlChars = 500, oversizeSpans = 4)
+    for ((cfg, run) <- Seq(Pipeline.Config(), small).zipWithIndex) {
+      val batch = Pipeline.extract(docs.toDS(), cfg).collect().sortBy(_.doc_id).toSeq
+      val mem = MemoryStream[Doc]
+      val q = Pipeline.extractStreaming(mem.toDS(), cfg)
+        .writeStream.format("memory").queryName(s"x_stream_$run")
+        .outputMode("append").start()
+      mem.addData(docs.take(4): _*)
+      q.processAllAvailable()
+      assert(s.sql(s"select * from x_stream_$run").count() == 4)
+      mem.addData(docs.drop(4): _*) // second micro-batch: incremental
+      q.processAllAvailable()
+      val streamed = s.table(s"x_stream_$run").as[ExtractedDoc].collect().sortBy(_.doc_id).toSeq
+      q.stop()
+      assert(streamed.map(_.doc_id) == batch.map(_.doc_id))
+      assert(streamed == batch, s"streaming extraction diverged from the batch pipeline under $cfg")
+      if (cfg == small)
+        assert(batch.find(_.doc_id == "giant").map(_.error).contains("span_text_bytes=6140"))
+    }
   }
 
   test("streaming: stateful sessionization closes sessions after gap") {
@@ -908,7 +917,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val docs = Corpus.generate(spark, 30, nPartitions = 2)
-    val extracted = Pipeline.extract(docs, Pipeline.Config(nSalts = 4))
+    val extracted = Pipeline.extract(docs)
     val media = Multimodal.mediaTable(extracted)
     val features = Multimodal.extractFeatures(media).collect()
     assert(features.nonEmpty)

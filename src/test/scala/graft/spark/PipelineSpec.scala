@@ -79,7 +79,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val docs = Corpus.generate(spark, 24, seed = 42L, oversizeFraction = 0.0, nPartitions = 4)
-    val out = Pipeline.extract(docs, Pipeline.Config(nSalts = 8)).collect()
+    val out = Pipeline.extract(docs).collect()
     assert(out.length == 24)
     val ok = out.filter(_.status == "ok")
     assert(ok.length >= 20, s"statuses: ${out.map(_.status).groupBy(identity).view.mapValues(_.length).toMap}")
@@ -100,9 +100,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("extraction is deterministic across runs and partitionings") {
     implicit val s: SparkSession = spark
     import s.implicits._
-    val a = Pipeline.extract(Corpus.generate(spark, 12, nPartitions = 2), Pipeline.Config(nSalts = 4))
+    val a = Pipeline.extract(Corpus.generate(spark, 12, nPartitions = 2))
       .collect().sortBy(_.doc_id).map(d => (d.doc_id, d.spans, d.title))
-    val b = Pipeline.extract(Corpus.generate(spark, 12, nPartitions = 6), Pipeline.Config(nSalts = 16))
+    val b = Pipeline.extract(Corpus.generate(spark, 12, nPartitions = 6))
       .collect().sortBy(_.doc_id).map(d => (d.doc_id, d.spans, d.title))
     assert(a.toSeq == b.toSeq)
   }
@@ -116,7 +116,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val out = java.nio.file.Files.createTempDirectory("graft-sink").toString
     try {
       val (extracted, lineage) = Pipeline.extractToSink(docs, "run-1", out,
-        Pipeline.Config(nSalts = 4), nParts)
+        Pipeline.Config(), nParts)
       // single-pass: the extraction plan must not cache the corpus
       assert(!extracted.queryExecution.executedPlan.toString.contains("InMemoryRelation"))
       val lrows = lineage.collect()
@@ -149,12 +149,12 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val firstHalf = docs.toDF()
         .filter(Lineage.partKey(col("doc_id"), nParts) < 4).as[Doc]
       val (_, lineage1) = Pipeline.extractToSink(firstHalf, "run-1", out,
-        Pipeline.Config(nSalts = 4), nParts)
+        Pipeline.Config(), nParts)
       val n1 = spark.read.parquet(out).count()
       // resumed run: remaining buckets, resume = true → append
       val remaining = Lineage.resumeFilter(docs.toDF(), lineage1.toDF(), nParts).as[Doc]
       val (_, lineage2) = Pipeline.extractToSink(remaining, "run-2", out,
-        Pipeline.Config(nSalts = 4), nParts, resume = true)
+        Pipeline.Config(), nParts, resume = true)
       val total = spark.read.parquet(out)
       assert(total.count() == 16, s"append lost rows: ${total.count()} (run1 wrote $n1)")
       assert(total.select("doc_id").distinct().count() == 16)
@@ -200,7 +200,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     try {
       val (_, lineage) = Pipeline.extractToSink(docs, "run-1", out,
-        Pipeline.Config(nSalts = 4), nParts, io)
+        Pipeline.Config(), nParts, io)
       val expectedKeys = lineage.collect().map(_.part_key).toSet
       // sidecar landed beside the sink and is skipped by the sink's own scan
       assert(spark.read.parquet(out + "/_lineage").count() == expectedKeys.size)
@@ -269,7 +269,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         override def drop(sp: SparkSession, table: String): Unit = inner.drop(sp, table)
       }
       val (extracted, lineage) = Pipeline.extractToSink(docs, "run-1", outPath,
-        Pipeline.Config(nSalts = 4), nParts, io)
+        Pipeline.Config(), nParts, io)
       val lrows = lineage.collect()
       val committed = spark.read.parquet(outPath).count()
       assert(committed < 16, "test setup: failed bucket must drop rows")
@@ -354,7 +354,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       // fresh run: sink + lineage sidecar land as catalog tables
       val firstHalf = docs.toDF().filter(Lineage.partKey(col("doc_id"), nParts) < 4).as[Doc]
       val (_, lineage1) = Pipeline.extractToSink(firstHalf, "run-1", tbl,
-        Pipeline.Config(nSalts = 4), nParts, io)
+        Pipeline.Config(), nParts, io)
       val n1 = spark.table(tbl).count()
       assert(n1 == firstHalf.count())
       assert(spark.catalog.tableExists(io.sidecar(tbl, "lineage")))
@@ -364,7 +364,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(done.isDefined)
       val remaining = Lineage.resumeFilter(docs.toDF(), done.get, nParts).as[Doc]
       val (_, lineage2) = Pipeline.extractToSink(remaining, "run-2", tbl,
-        Pipeline.Config(nSalts = 4), nParts, io, resume = true)
+        Pipeline.Config(), nParts, io, resume = true)
       assert(spark.table(tbl).count() == 12)
       assert(spark.table(tbl).select("doc_id").distinct().count() == 12)
       assert(lineage2.collect().map(_.n_docs).sum == 12)
@@ -405,7 +405,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       // run 1: clean commit of buckets 0..3 (sink + sidecar)
       val firstHalf = docs.toDF().filter(Lineage.partKey(col("doc_id"), nParts) < 4).as[Doc]
       val (_, lineage1) = Pipeline.extractToSink(firstHalf, "run-1", tbl,
-        Pipeline.Config(nSalts = 4), nParts, io)
+        Pipeline.Config(), nParts, io)
       val n1 = spark.table(tbl).count()
       // run 2 (resume): sink APPEND commits, then the process dies before
       // the sidecar overwrite — sidecar left STALE (still claims run-1 only)
@@ -413,7 +413,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       crashSidecar = true
       intercept[SimCrash] {
         Pipeline.extractToSink(rem1, "run-2", tbl,
-          Pipeline.Config(nSalts = 4), nParts, io, resume = true)
+          Pipeline.Config(), nParts, io, resume = true)
       }
       crashSidecar = false
       val committed = spark.table(tbl).count()
@@ -428,7 +428,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val rem2 = Lineage.resumeFilter(docs.toDF(), done.get, nParts)
       assert(rem2.count() == 0, s"stale sidecar trusted: ${rem2.count()} docs re-extracted")
       val (_, lineage3) = Pipeline.extractToSink(rem2.as[Doc], "run-3", tbl,
-        Pipeline.Config(nSalts = 4), nParts, io, resume = true)
+        Pipeline.Config(), nParts, io, resume = true)
       assert(spark.table(tbl).count() == 12)
       assert(spark.table(tbl).select("doc_id").distinct().count() == 12,
         "crash-window resume duplicated docs")
@@ -456,22 +456,20 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("salt distribution: pmod(xxhash64(doc_id)) spreads ids with bounded skew") {
-    val s = spark
-    import s.implicits._
+  test("Lineage.partKey buckets doc ids evenly: every bucket used, bounded skew") {
     import org.apache.spark.sql.functions._
-    val nSalts = 64
+    val nParts = 64
     val n = 20000
     val counts = spark.range(n)
       .select(concat(lit("doc_"), col("id")).as("doc_id"))
-      .select(pmod(xxhash64(col("doc_id")), lit(nSalts)).as("salt"))
-      .groupBy("salt").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // every salt used, and no hot salt: max ≤ 2× the mean (binomial
+      .select(Lineage.partKey(col("doc_id"), nParts).as("part_key"))
+      .groupBy("part_key").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // every bucket used, and no hot bucket: max ≤ 2× the mean (binomial
     // concentration puts the true max ~1.25×; 2× catches a broken hash)
-    assert(counts.size == nSalts, s"only ${counts.size}/$nSalts salts used")
-    val mean = n.toDouble / nSalts
+    assert(counts.size == nParts, s"only ${counts.size}/$nParts buckets used")
+    val mean = n.toDouble / nParts
     val max = counts.values.max
-    assert(max <= 2 * mean, s"hot salt: max=$max mean=$mean")
+    assert(max <= 2 * mean, s"hot bucket: max=$max mean=$mean")
   }
 
   test("parquet compaction: rename swap shrinks files, preserves content exactly, keeps the lineage sidecar valid") {
@@ -486,9 +484,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       // two runs → two appended file sets (the small-files growth mode)
       val firstHalf = docs.toDF().filter(Lineage.partKey(col("doc_id"), nParts) < 4).as[Doc]
-      val (_, l1) = Pipeline.extractToSink(firstHalf, "run-1", out, Pipeline.Config(nSalts = 4), nParts, io)
+      val (_, l1) = Pipeline.extractToSink(firstHalf, "run-1", out, Pipeline.Config(), nParts, io)
       val remaining = Lineage.resumeFilter(docs.toDF(), l1.toDF(), nParts).as[Doc]
-      Pipeline.extractToSink(remaining, "run-2", out, Pipeline.Config(nSalts = 4), nParts, io, resume = true)
+      Pipeline.extractToSink(remaining, "run-2", out, Pipeline.Config(), nParts, io, resume = true)
       val beforeRows = spark.read.parquet(out).orderBy("doc_id").collect()
       def dataFiles() = new java.io.File(out).listFiles()
         .count(f => f.isFile && f.getName.endsWith(".parquet"))
@@ -559,9 +557,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val bad = Seq(
       Doc("bad_1", Seq(SpanIn("text", null, null, 0))),
       Doc("bad_2", Seq(SpanIn("text", "<div><p>" + ("x" * 10), null, 0))),
-      Doc("bad_3", Nil)).toDS()
-    val out = Pipeline.extract(bad, Pipeline.Config(nSalts = 2)).collect()
-    assert(out.length == 3)
+      Doc("bad_3", Nil),
+      Doc("bad_4", null)).toDS()
+    val out = Pipeline.extract(bad).collect()
+    assert(out.length == 4)
     assert(out.forall(d => d.status != null))
   }
 }
