@@ -1822,9 +1822,9 @@ object SiteRules {
   /** `WikipediaHermitianListPruneRule`. */
   private def wikipediaHermitianListPrune(articleContent: Int, ctx: Ctx): Unit = {
     val dom = ctx.dom
-    // raw single-word probe before materializing the WHOLE article text
-    // (this rule runs on every doc; the full build was a measured hotspot)
-    if (!rawTextNodeContains(dom, articleContent, "ermitian")) return
+    // text gate: all three phrases contain the needle, so the lowercased
+    // article text is built only when the folded stream has it
+    if (!foldedText(dom, articleContent).contains(HermitianGate)) return
     val wholeText = innerText(dom, articleContent).toLowerCase
     if (!(wholeText.contains("hermitian matrix") &&
         wholeText.contains("the hermitian complex") &&
@@ -2217,87 +2217,91 @@ object SiteRules {
     }
   }
 
-  /** Allocation-free probe: the needle (ASCII-case-insensitive) contained
-    * in the concatenated text-node stream of the subtree — used to gate
-    * rules that would otherwise materialize large subtree text on every
-    * document. The scan streams across text-node boundaries with an n-char
-    * ring buffer, so a word split across inline markup or around a
-    * parse-dropped comment is still found, and WHITESPACE RUNS COLLAPSE TO
-    * ONE SPACE — the same whitespace semantics as the normalized innerText
-    * the guarded rules match against, so a newline or double space inside
-    * a multi-word needle phrase in source HTML cannot silently disable the
-    * rule. Conservative: concatenation ignores block boundaries, so a
-    * match spanning two unrelated blocks is a (harmless) false positive —
-    * this is a gate, the guarded rule does the precise check.
+  /** The gate stream of a subtree: its text nodes in tree order, every
+    * whitespace run collapsed to one space (leading runs dropped), every
+    * char folded with `Character.toLowerCase(char)`. Rules whose precise
+    * check builds per-element text first ask whether their needle occurs
+    * here at all; the stream is built once and answers every needle with
+    * `contains`. Text is concatenated across inline markup (a word split
+    * by `<b>` is still found) and across block boundaries too, so a match
+    * spanning two blocks is a harmless false positive: the guarded rule
+    * does the precise check. The collapse matches the normalized innerText
+    * those checks read, so a newline or double space inside a source
+    * phrase cannot hide it from its gate.
     */
-  private[algo] def rawTextNodeContains(dom: Dom, root: Int, rawNeedle: String): Boolean = {
-    // normalize the needle with the SAME collapse the scanned stream gets:
-    // a tab/newline/double-space inside a needle would otherwise never
-    // match (the stream side emits single spaces only) and silently
-    // disable its guarded rule — the exact failure mode the stream-side
-    // collapse was added to eliminate. Current needles are all lowercase
-    // single-space already, so this is hazard-proofing for future rules.
-    val needle = {
-      val sb = new java.lang.StringBuilder(rawNeedle.length)
-      var i = 0
-      var lastWs = false
-      while (i < rawNeedle.length) {
-        val c = rawNeedle.charAt(i)
-        if (Character.isWhitespace(c)) {
-          if (!lastWs && sb.length > 0) sb.append(' ')
-          lastWs = true
-        } else {
-          sb.append(Character.toLowerCase(c))
-          lastWs = false
-        }
-        i += 1
-      }
-      // drop a trailing collapsed space so "foo " still matches mid-stream
-      if (sb.length > 0 && sb.charAt(sb.length - 1) == ' ') sb.setLength(sb.length - 1)
-      sb.toString
-    }
-    val n = needle.length
-    if (n == 0) return true
-    val low = new Array[Char](n)
-    var k0 = 0
-    while (k0 < n) { low(k0) = needle.charAt(k0); k0 += 1 }
-    val ring = new Array[Char](n)
-    var filled = 0
-    var pos = 0
-    var lastWasSpace = true // collapses leading whitespace too
+  private[algo] def foldedText(dom: Dom, root: Int): String = {
+    var size = 0
     var cur = root
+    while (cur != -1) {
+      if (dom.kind(cur) == Dom.Text) size += dom.text(cur).length
+      cur = dom.nextInTree(cur, root)
+    }
+    // each text node is bulk-copied to the write position and folded in
+    // place: the fold never emits more chars than it reads
+    val buf = new Array[Char](size)
+    var n = 0
+    cur = root
     while (cur != -1) {
       if (dom.kind(cur) == Dom.Text) {
         val s = dom.text(cur)
-        var i = 0
-        while (i < s.length) {
-          val raw = s.charAt(i)
-          val ws = Character.isWhitespace(raw)
-          if (!(ws && lastWasSpace)) {
-            lastWasSpace = ws
-            ring(pos) = if (ws) ' ' else Character.toLowerCase(raw)
-            pos += 1
-            if (pos == n) pos = 0
-            if (filled < n) filled += 1
-            if (filled == n) {
-              var k = 0
-              var ok = true
-              while (ok && k < n) {
-                var j = pos + k
-                if (j >= n) j -= n
-                if (ring(j) != low(k)) ok = false
-                k += 1
-              }
-              if (ok) return true
-            }
-          }
-          i += 1
-        }
+        s.getChars(0, s.length, buf, n)
+        n = fold(buf, n, n + s.length, n)
       }
       cur = dom.nextInTree(cur, root)
     }
-    false
+    new String(buf, 0, n)
   }
+
+  /** Folds `buf(from until end)` into `buf` from index `out` (≤ `from`)
+    * and returns the end of the fold. A whitespace run is pending exactly
+    * when the fold is empty or ends in a space, since no other char folds
+    * to one. The ASCII branches are exact: below 128,
+    * `Character.isWhitespace` is true for \t..\r, \u001C..\u001F and the
+    * space, and `Character.toLowerCase` only maps A..Z.
+    */
+  private def fold(buf: Array[Char], from: Int, end: Int, out0: Int): Int = {
+    var out = out0
+    var i = from
+    while (i < end) {
+      val c = buf(i)
+      val ws =
+        if (c < 128) c == ' ' || (c >= '\t' && c <= '\r') || (c >= '\u001C' && c <= '\u001F')
+        else Character.isWhitespace(c)
+      if (!ws) {
+        buf(out) =
+          if (c < 128) { if (c >= 'A' && c <= 'Z') (c + 32).toChar else c }
+          else Character.toLowerCase(c)
+        out += 1
+      } else if (out > 0 && buf(out - 1) != ' ') {
+        buf(out) = ' '
+        out += 1
+      }
+      i += 1
+    }
+    out
+  }
+
+  /** A constant gate needle, required to be in the stream's normal form
+    * (its own fold, no trailing space) so that `foldedText(…).contains`
+    * cannot miss it on a case or whitespace difference.
+    */
+  private def gateNeedle(needle: String): String = {
+    val buf = needle.toCharArray
+    val folded = new String(buf, 0, fold(buf, 0, buf.length, 0))
+    require(needle.nonEmpty && folded == needle && !needle.endsWith(" "),
+      s"gate needle '$needle' is not in folded form")
+    needle
+  }
+
+  /** Needles of the text gates in [[wikipediaHermitianListPrune]] and
+    * [[wikipediaGovernmentPortraitCaption]]: every prune signature of the
+    * guarded loops contains its gate's needle.
+    */
+  private[algo] val HermitianGate: String = gateNeedle("ermitian")
+  private[algo] val CaptionGates: Seq[String] = Seq("richard seddon", "southern alps",
+    "hinepare", "hobbiton", "haka performed").map(gateNeedle)
+  private[algo] val AorakiGate: String = gateNeedle("aoraki / mount cook")
+  private[algo] val MaoriLegendGate: String = gateNeedle("speakers of māori according")
 
   private def normText(dom: Dom, id: Int): String =
     sTrim(innerText(dom, id)).toLowerCase
@@ -2903,32 +2907,36 @@ object SiteRules {
         t.contains("the lord of the rings") && t.contains("the hobbit")) ||
       (t.startsWith("a haka performed") && t.contains("national rugby union team") &&
         t.contains("before a game") && t.contains("stamping of the feet"))
-    // allocation gate: every prune signature carries one of these rare
-    // tokens; skip the per-div text builds when none occurs in the article
-    // (measured: this loop's innerText+toLowerCase was a top-3 allocation
-    // site across the whole corpus before the gate)
-    val captionGate = rawTextNodeContains(dom, articleContent, "richard seddon") ||
-      rawTextNodeContains(dom, articleContent, "southern alps") ||
-      rawTextNodeContains(dom, articleContent, "hinepare") ||
-      rawTextNodeContains(dom, articleContent, "hobbiton") ||
-      rawTextNodeContains(dom, articleContent, "haka performed")
-    if (captionGate) for (thumb <- Select.select(dom, articleContent, "div")) {
+    // Text gates: the caption, Aoraki and legend loops below build text
+    // per element, so each runs only when its needle occurs in the
+    // article's folded text. The stream is built at the first gate (after
+    // step 1) and rebuilt at a later gate only if one of steps 2-4 has
+    // changed the tree since, so every gate reads exactly the stream of
+    // the tree at its own position.
+    var folded: String = null
+    var changed = false
+    def gate(needle: String): Boolean = {
+      if (folded == null || changed) { folded = foldedText(dom, articleContent); changed = false }
+      folded.contains(needle)
+    }
+    if (CaptionGates.exists(gate)) for (thumb <- Select.select(dom, articleContent, "div")) {
       if (dom.parent(thumb) != -1) {
         val kids = dom.childElements(thumb)
         if (kids.length >= 2 && dom.tag(kids(0)) == "p" && dom.tag(kids(1)) == "div" &&
             Select.selectFirst(dom, kids(0), "img") != -1 &&
-            shouldPruneCaption(sTrim(innerText(dom, kids(1))).toLowerCase))
+            shouldPruneCaption(sTrim(innerText(dom, kids(1))).toLowerCase)) {
           dom.remove(kids(1))
+          changed = true
+        }
       }
     }
-    // allocation gate: article-unique phrase — skip the per-paragraph text
-    // builds on every other document
-    if (rawTextNodeContains(dom, articleContent, "aoraki / mount cook"))
-    for (p <- Select.select(dom, articleContent, "p")) {
+    if (gate(AorakiGate)) for (p <- Select.select(dom, articleContent, "p")) {
       if (dom.parent(p) != -1 &&
           sTrim(innerText(dom, p)).toLowerCase
-            .startsWith("aoraki / mount cook is the highest point of new zealand"))
+            .startsWith("aoraki / mount cook is the highest point of new zealand")) {
         dom.remove(p)
+        changed = true
+      }
     }
     // 3. blank landscape-gallery list items
     for (a <- Select.select(dom, articleContent, "a")) {
@@ -2940,7 +2948,7 @@ object SiteRules {
           cur = dom.parent(cur)
         if (cur != -1) {
           var c = dom.firstChild(cur)
-          while (c != -1) { val next = dom.nextSib(c); dom.remove(c); c = next }
+          while (c != -1) { val next = dom.nextSib(c); dom.remove(c); changed = true; c = next }
         }
       }
     }
@@ -2954,16 +2962,14 @@ object SiteRules {
           while (c != -1) { val next = dom.nextSib(c); if (c != inner) dom.remove(c); c = next }
           dom.moveChildren(inner, outer)
           dom.remove(inner)
+          changed = true
         }
       }
     }
     // 5. Māori-language census legend rebuild
     val legendLabels = Seq("Less than 5%", "More than 5%", "More than 10%",
       "More than 20%", "More than 30%", "More than 40%", "More than 50%")
-    // allocation gate: the legend phrase is article-unique; without it the
-    // loop below built innerText for EVERY paragraph of every document
-    if (rawTextNodeContains(dom, articleContent, "speakers of māori according"))
-    for (p <- Select.select(dom, articleContent, "p")) {
+    if (gate(MaoriLegendGate)) for (p <- Select.select(dom, articleContent, "p")) {
       if (dom.parent(p) != -1) {
         val t = innerText(dom, p).toLowerCase
         if (t.contains("speakers of māori according to the 2013 census") &&

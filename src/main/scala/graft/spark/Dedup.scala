@@ -694,9 +694,14 @@ object Dedup {
   def dupClusters(pairs: DataFrame, aCol: String = "doc_a",
       bCol: String = "doc_b", maxIters: Int = 20,
       maxDriverPairs: Long = 1L << 21): DataFrame = {
-    // undirected edge list + self-loops: label(v) = min over N(v) ∪ {v}
+    // undirected edge list + self-loops: label(v) = min over N(v) ∪ {v}.
+    // A pair with a null id links nothing (a null doc can never cluster),
+    // so it is dropped here, before either path reads the edges: the
+    // driver path's (Long, Long) decode cannot hold a null, and both paths
+    // then see the same graph.
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
       .localCheckpoint() // reused every iteration; also cuts the pair-emitter plan off the loop
     // Small-graph fast path: the distributed fixpoint costs several Spark
     // jobs PER ITERATION (join + agg + checkpoint + probe), which dwarfs

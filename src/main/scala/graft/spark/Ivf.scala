@@ -212,8 +212,10 @@ object Ivf {
             val sq = new Array[Long](dims)
             var n = 0L
             rows.foreach { case (_, qs, cnt) =>
+              require(qs.length == dims, s"k-means partial for list ${c.listId} has " +
+                s"${qs.length} dims, centroid has $dims")
               var i = 0
-              while (i < dims && i < qs.length) { sq(i) += qs(i); i += 1 }
+              while (i < dims) { sq(i) += qs(i); i += 1 }
               n += cnt
             }
             val nv = new Array[Double](dims)

@@ -115,10 +115,10 @@ class DomOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("rawTextNodeContains collapses whitespace runs like normalized innerText") {
+  test("foldedText collapses whitespace runs like normalized innerText") {
     def probe(html: String, needle: String): Boolean = {
       val d = Parser.parse("<body>" + html + "</body>")
-      SiteRules.rawTextNodeContains(d, d.bodyEl, needle)
+      SiteRules.foldedText(d, d.bodyEl).contains(needle)
     }
     // single-space needle vs newline / double-space / tab in source HTML —
     // the exact divergence that used to silently disable a gated rule

@@ -712,6 +712,35 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("not converged"), e.getMessage)
   }
 
+  test("dup clusters: null ids link nothing, and the fast and distributed paths agree") {
+    val s = spark
+    import s.implicits._
+    def id(v: Long): java.lang.Long = v
+    val none: java.lang.Long = null
+    val pairs = Seq((id(1), id(2)), (id(2), none), (none, id(3)), (none, none),
+      (id(10), id(11)), (id(12), none)).toDF("doc_a", "doc_b")
+    def clusters(maxDriverPairs: Long) =
+      Dedup.dupClusters(pairs, maxDriverPairs = maxDriverPairs).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val fast = clusters(1L << 21)
+    val dist = clusters(0L)
+    assert(fast == dist, s"fast=$fast dist=$dist")
+    // docs paired only with a null id are singletons, hence absent
+    assert(fast == Map(1L -> 1L, 2L -> 1L, 10L -> 10L, 11L -> 10L), fast.toString)
+  }
+
+  test("ivf: the k-means driver merge fails on a partial whose dims differ from its centroid") {
+    val s = spark
+    import s.implicits._
+    // one list; the two partitions hold 3-dim and 4-dim vectors, so each
+    // partition's own dims check passes and only the driver merge sees both
+    val rows = (0L until 8L).map(i => (i, Seq.fill(3)(1.0 + i))) ++
+      (8L until 16L).map(i => (i, Seq.fill(4)(1.0 + i)))
+    val vecs = s.sparkContext.parallelize(rows, 2).toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](Ivf.kmeansModel(vecs, nLists = 1, iters = 1))
+    assert(e.getMessage.contains("dims"), e.getMessage)
+  }
+
   test("word ops: d12 repetition fractions and d13 benchmark contamination match hand-computed values") {
     val s = spark
     import s.implicits._
