@@ -24,7 +24,7 @@ object Queries {
   def extractDocuments(spark: SparkSession, sfDir: String): DataFrame =
     x1_extract(spark, sfDir)
 
-  private def corpusSize(sfDir: String): Long =
+  private[graft] def corpusSize(sfDir: String): Long =
     if (sfDir.contains("0.001")) 100L
     else if (sfDir.contains("0.01")) 400L
     else 2000L
