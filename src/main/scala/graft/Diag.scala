@@ -68,8 +68,8 @@ object Diag {
     try run(spark, cmd, sys.env) finally spark.stop()
   }
 
-  /** Runs `cmd` with settings from `env`, then releases every session-scoped
-    * artifact the queries cached.
+  /** Runs `cmd` with settings from `env`, then releases every session
+    * artifact the queries and stages built.
     */
   def run(spark: SparkSession, cmd: Cmd, env: Map[String, String]): Unit = {
     def reps(default: Int) = env.get("SPARK_GRAFT_REPS").fold(default)(_.toInt)
@@ -192,22 +192,20 @@ object Diag {
 
   // ------------------------------------------------------------- stages
 
-  /** What a stage reads. Persisted inputs are built on first use, inside
-    * the stage's first rep, and unpersisted by [[release]] after the stage.
+  /** What a stage reads. The persisted inputs are the queries' own session
+    * artifacts: built on first use, inside the first rep of the first stage
+    * that reads them, and released with the queries' artifacts by [[run]].
     */
   private final class StageInputs(val spark: SparkSession, val sfDir: String) {
-    private val held = mutable.ArrayBuffer.empty[Dataset[_]]
-    private def hold(df: DataFrame): DataFrame = { held += df.persist(); df.count(); df }
     def docs: DataFrame = Tables.load(spark, sfDir, "documents")
     def emb: DataFrame = Tables.load(spark, sfDir, "embeddings")
-    lazy val sigs: DataFrame = hold(Dedup.simhashPortableDf(docs))
+    def sigs: DataFrame = Queries.simhashSigs(spark, sfDir)
     def embSignatures: DataFrame = Ann.signatureTable(emb, nTables = 16, nBits = 8)
-    lazy val embSigs: DataFrame = hold(embSignatures)
+    def embSigs: DataFrame = Queries.embSignatures(spark, sfDir)
     def corpus: Dataset[Doc] = Corpus.generate(spark, Queries.corpusSize(sfDir))
     /** x3's resume input: the corpus minus the 16 of 32 part keys a prior run finished. */
     def resumed: DataFrame = Lineage.resumeFilter(corpus.toDF(),
       spark.range(16).select(col("id").as("part_key")), nParts = 32)
-    def release(): Unit = held.foreach(_.unpersist())
   }
 
   private def query(name: String): StageInputs => DataFrame =
@@ -225,9 +223,11 @@ object Diag {
     },
     "emb_signature_build" -> (in => in.embSignatures),
     "d10_join_path" -> (in => Ann.cosineDupPairsFromSignatures(in.embSigs, threshold = 0.4,
-      bucketBits = 4, maxBucketSize = 4096, broadcastVectors = false)),
+      bucketBits = Queries.d10BucketBits(in.spark, in.sfDir), maxBucketSize = 4096,
+      broadcastVectors = false)),
     "d10_broadcast_path" -> (in => Ann.cosineDupPairsFromSignatures(in.embSigs, threshold = 0.4,
-      bucketBits = 4, maxBucketSize = 4096, broadcastVectors = true)),
+      bucketBits = Queries.d10BucketBits(in.spark, in.sfDir), maxBucketSize = 4096,
+      broadcastVectors = true)),
     "lsh_candidates_build" -> (in => Dedup.minhashLshPairs(in.docs)),
     "d13_query" -> query("d13_decontaminate"),
     "d12_query" -> query("d12_repetition"),
@@ -245,24 +245,19 @@ object Diag {
 
   /** Each named stage (all by default) `reps` times behind a noop sink —
     * every column of every row computed, nothing written — in a warmed
-    * session. What a stage persisted, its own inputs and the queries'
-    * session caches, is released before the next stage.
+    * session. The session artifacts a stage builds stay for the later
+    * stages, as they do for the queries; [[run]] releases them.
     */
   def stages(spark: SparkSession, sfDir: String, reps: Int, names: Seq[String]): Unit = {
     warmUp(spark, sfDir)
+    val in = new StageInputs(spark, sfDir)
     for ((name, stage) <- pick("stage", stageTable, names)) {
-      val in = new StageInputs(spark, sfDir)
-      try {
-        val walls = timeReps(name, reps) {
-          spark.sparkContext.setJobDescription(s"stage:$name")
-          stage(in).write.format("noop").mode("overwrite").save()
-          "noop"
-        }
-        summary(name, walls)
-      } finally {
-        in.release()
-        Queries.releaseCaches(spark)
+      val walls = timeReps(name, reps) {
+        spark.sparkContext.setJobDescription(s"stage:$name")
+        stage(in).write.format("noop").mode("overwrite").save()
+        "noop"
       }
+      summary(name, walls)
     }
   }
 

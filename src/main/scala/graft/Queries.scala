@@ -3,12 +3,18 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.spark.SessionArtifacts.memo
 
 /** SQL-expressible operator inventory (SURVEY.md §2.7) + the
   * training-data-pipeline ops (dedup / similarity / text analysis) over the
   * driver tables. Every query here is declarative DataFrame API so Catalyst
   * gets full pushdown/pruning; the per-doc extraction engine lives in
   * graft.html / graft.algo and enters through [[extractDocuments]].
+  *
+  * The tables several queries share (the extracted corpus, LSH
+  * candidates, simhash signatures/pairs/clusters, the sign-LSH table, the
+  * IVF index) are session artifacts: `memo` builds each once per Spark
+  * application and tables directory, and [[releaseCaches]] frees them.
   */
 object Queries {
 
@@ -29,17 +35,15 @@ object Queries {
     else if (sfDir.contains("0.01")) 400L
     else 2000L
 
-  /** Session-scoped cache of the extracted corpus: x1/x2/m1 all consume
-    * the extraction OUTPUT table — in production they read the committed
-    * sink once, so the bench/verify session extracts once too.
+  /** The extracted corpus: x1/x2 both consume the extraction OUTPUT table
+    * — in production they read the committed sink once, so the
+    * bench/verify session extracts once too.
     */
-  private val extractedCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.Dataset[graft.spark.ExtractedDoc]]()
   private def extractedDocs(s: SparkSession, dir: String): org.apache.spark.sql.Dataset[graft.spark.ExtractedDoc] =
-    extractedCache.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ => {
+    memo("extracted", s, dir) {
       implicit val sp: SparkSession = s
       graft.spark.Pipeline.extract(graft.spark.Corpus.generate(s, corpusSize(dir))).persist()
-    })
+    }
 
   /** Extraction smoke/verify surface: doc_id, status, metadata, span
     * stats per document. Rows-only check (extraction is not
@@ -169,8 +173,8 @@ object Queries {
       .orderBy($"o_custkey")
   }
 
-  /** Time-bucketed event aggregation (the streaming-shaped workload run in
-    * batch; the structured-streaming twin lives in graft.streaming).
+  /** Time-bucketed event aggregation (the streaming-shaped workload, run
+    * in batch).
     */
   def q7_events(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "events")
@@ -297,15 +301,14 @@ object Queries {
       .orderBy($"doc_id")
   }
 
-  /** Session-scoped cache of the LSH candidate table: the shingle →
+  /** The LSH candidate table, a session artifact: the shingle →
     * signature → band → bucket-join stack is the expensive half of BOTH
     * d7 and d8, and in production the candidate table is a reusable
     * artifact (minted once, consumed by dedup decisions and by exact
     * verification). Persisted so a bench/verify session computes it once.
     */
-  private val lshCandCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def lshCandidates(s: SparkSession, dir: String): DataFrame =
-    lshCandCache.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ =>
+    memo("lsh_candidates", s, dir)(
       // the generic LSH layer orients pairs by STRING id compare; re-orient
       // numerically for the oracle ("27" < "7" lexicographically)
       graft.spark.Dedup.minhashLshPairs(t(s, dir, "documents"))
@@ -341,14 +344,13 @@ object Queries {
     * variant remains as [[graft.spark.Dedup.simhashDf]] with its own
     * JVM≡column parity spec.
     */
-  /** Session-scoped cache of the portable SimHash fingerprint table — the
-    * REUSABLE artifact shared by d9 (the fingerprint surface) and d11 (the
+  /** The portable SimHash fingerprint table, a session artifact — the
+    * REUSABLE table shared by d9 (the fingerprint surface) and d11 (the
     * banded near-dup search): in production it is minted once per corpus
     * snapshot, same economics as the sign-LSH signature table.
     */
-  private val simhashCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def simhashSigs(s: SparkSession, dir: String): DataFrame =
-    simhashCache.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ =>
+  private[graft] def simhashSigs(s: SparkSession, dir: String): DataFrame =
+    memo("simhash_sigs", s, dir)(
       graft.spark.Dedup.simhashPortableDf(t(s, dir, "documents")).persist())
 
   def d9_simhash(s: SparkSession, dir: String): DataFrame =
@@ -356,16 +358,15 @@ object Queries {
 
   private val d11Cap = 256
 
-  /** Session-scoped cache of the banded simhash near-dup PAIR table — the
-    * artifact d11 registers AND d15 clusters. d15 previously re-ran the
-    * whole band self-join + distinct over the cached fingerprints; in
+  /** The banded simhash near-dup PAIR table, a session artifact — the
+    * table d11 registers AND d15 clusters. d15 previously re-ran the
+    * whole band self-join + distinct over the shared fingerprints; in
     * production the pair table is the persisted dedup-decision input, so
     * the session computes it once too (same economics as
     * [[lshCandidates]]).
     */
-  private val simhashPairsCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def simhashPairs(s: SparkSession, dir: String): DataFrame =
-    simhashPairsCache.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ =>
+    memo("simhash_pairs", s, dir)(
       graft.spark.Dedup.simhashPairsFromSigs(simhashSigs(s, dir), maxBucketSize = d11Cap)
         .persist())
 
@@ -385,20 +386,11 @@ object Queries {
     val cov = recordOnce(s, dir, "d11_simhash_pairs", "band_coverage")(
       graft.spark.Dedup.simhashBandCoverage(
         graft.spark.Dedup.simhashBandKeys(sigs), d11Cap))
-    println(f"[d11_simhash_pairs] cap=$d11Cap " +
-      f"buckets=${cov.getAs[Long]("n_buckets")} dropped_buckets=${cov.getAs[Long]("n_dropped_buckets")} " +
-      f"dropped_key_fraction=${cov.getAs[Double]("dropped_key_fraction")}%.4f status=${cov.getAs[String]("status")}")
     if (cov.getAs[String]("status") != "ok")
       System.err.println(s"[d11_simhash_pairs] WARNING: degenerate-band cap is " +
         "shedding a recall-relevant key fraction — see the recorded coverage row")
     simhashPairs(s, dir).orderBy($"doc_a", $"doc_b")
   }
-
-  /** Session-scoped cache of the resolved duplicate clusters (the
-    * pair-graph fixpoint is iterative — computed once per corpus
-    * snapshot, like the signature tables).
-    */
-  private val clusterCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** Duplicate-cluster resolution: the d11 near-dup PAIRS resolved into
     * connected components with a canonical smallest-id keeper
@@ -408,14 +400,15 @@ object Queries {
     * actionable dedup decision: `doc_id != cluster_id` ⇒ drop. The DuckDB
     * oracle replays the full chain — fingerprints → banding → cap →
     * pairs → a RECURSIVE transitive closure — so the check is
-    * rows+schema+hash.
+    * rows+schema+hash. The clusters are a session artifact: the
+    * pair-graph fixpoint is iterative, so it is computed once per corpus
+    * snapshot, like the signature tables.
     */
   def d15_dup_clusters(s: SparkSession, dir: String): DataFrame =
-    clusterCache.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ =>
-        graft.spark.Dedup.dupClusters(simhashPairs(s, dir)))
+    memo("dup_clusters", s, dir)(graft.spark.Dedup.dupClusters(simhashPairs(s, dir)))
       .orderBy($"doc_id")
 
-  /** Session-scoped memo of Coverage recordings: a coverage/balance report
+  /** Coverage recordings, memoized per session: a coverage/balance report
     * is a pure function of a session-immutable artifact (the persisted
     * fingerprint/signature/index tables, or the driver's parquet corpus),
     * so re-aggregating it on every execution of the consuming query buys
@@ -423,13 +416,9 @@ object Queries {
     * ([[graft.spark.Coverage]] keeps it queryable/persistable exactly as
     * before), later executions in the same session reuse it.
     */
-  private val coverageOnce =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Row]()
   private def recordOnce(s: SparkSession, dir: String, query: String,
       kind: String)(report: => DataFrame): org.apache.spark.sql.Row =
-    coverageOnce.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + dir + "|" + query + "|" + kind,
-      _ => graft.spark.Coverage.record(query, kind, report))
+    memo(s"coverage $query $kind", s, dir)(graft.spark.Coverage.record(query, kind, report))
 
   /** Whitespace-token word array of a document — the shared tokenization
     * of the word-level ops (d12/d13), identical to d2's token split.
@@ -594,31 +583,27 @@ object Queries {
       .orderBy($"source")
   }
 
-  /** Session-scoped cache of the sign-LSH signature table over the
-    * embeddings corpus: the REUSABLE artifact shared by d10 (bucketed
+  /** The sign-LSH signature table over the embeddings corpus with its row
+    * count, a session artifact: the REUSABLE table shared by d10 (bucketed
     * near-dup self-join) and e2 (precomputed ANN probes) — in production
     * it's minted once per corpus snapshot and persisted beside it.
     * Family: 16 tables × 8 bits (d10 sub-bands on the low 3 bits).
     */
-  private val sigCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val sigCountCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  /** Stored signature width of the shared table — the ceiling for any
-    * derived sub-banding width (sub-bands are low-bit prefixes).
-    */
-  private val embSigBits = 8
-  private def embSignatures(s: SparkSession, dir: String): DataFrame =
-    sigCache.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, key => {
+  private def embSignatureTable(s: SparkSession, dir: String): (DataFrame, Long) =
+    memo("emb_signatures", s, dir) {
       val df = graft.spark.Ann.signatureTable(t(s, dir, "embeddings"),
         nTables = 16, nBits = embSigBits).persist()
       // materialize the shared artifact once and capture the corpus
       // cardinality — the input to the scale-aware bucket-width derivation
-      sigCountCache.put(key, df.count())
-      df
-    })
-  private def embCount(s: SparkSession, dir: String): Long = {
-    embSignatures(s, dir)
-    sigCountCache.get(s.sparkContext.applicationId + "|" + dir).longValue()
-  }
+      (df, df.count())
+    }
+  private[graft] def embSignatures(s: SparkSession, dir: String): DataFrame =
+    embSignatureTable(s, dir)._1
+  private def embCount(s: SparkSession, dir: String): Long = embSignatureTable(s, dir)._2
+  /** Stored signature width of the shared table — the ceiling for any
+    * derived sub-banding width (sub-bands are low-bit prefixes).
+    */
+  private val embSigBits = 8
 
   /** Sub-banding width for d10, DERIVED from the embeddings-corpus
     * cardinality (expected bucket occupancy ≤ 512, 8× headroom under the
@@ -628,7 +613,7 @@ object Queries {
     * SFs (500–2000 vectors) this derives the minimum, 3; the value is
     * mirrored into the generated DuckDB oracle via [[d10LastBits]].
     */
-  private def d10BucketBits(s: SparkSession, dir: String): Int =
+  private[graft] def d10BucketBits(s: SparkSession, dir: String): Int =
     graft.spark.Ann.deriveBucketBits(embCount(s, dir),
       targetBucketSize = d10TargetBucket, minBits = 3, maxBits = embSigBits)
   private val d10TargetBucket = 512
@@ -664,9 +649,6 @@ object Queries {
     val cov = recordOnce(s, dir, "d10_embed_dup", "bucket_coverage")(
       graft.spark.Ann.bucketCoverage(sig, bits, d10Cap))
     val droppedFrac = cov.getAs[Double]("dropped_key_fraction")
-    println(f"[d10_embed_dup] n=${embCount(s, dir)} bucketBits=$bits cap=$d10Cap " +
-      f"buckets=${cov.getAs[Long]("n_buckets")} dropped_buckets=${cov.getAs[Long]("n_dropped_buckets")} " +
-      f"dropped_key_fraction=$droppedFrac%.4f status=${cov.getAs[String]("status")}")
     if (droppedFrac > 0.05)
       System.err.println(f"[d10_embed_dup] WARNING: cap drops ${droppedFrac * 100}%.1f%% of " +
         "bucket keys — recall is degraded; raise bucketBits/targetBucketSize")
@@ -706,24 +688,23 @@ object Queries {
       .orderBy($"query_id", $"rk")
   }
 
-  /** Session-scoped cache of the IVF (index, centroid-sidecar) pair over
-    * the embeddings corpus — the coarse-quantizer counterpart to the
-    * sign-LSH signature table: the deterministic k-means model is trained
-    * once per corpus snapshot ([[graft.spark.Ivf.kmeansModel]]), the index
-    * built and persisted, and the centroid table rides beside it the way
-    * the lineage sidecar rides beside the sink.
+  /** The IVF (index, centroid-sidecar) pair over the embeddings corpus, a
+    * session artifact — the coarse-quantizer counterpart to the sign-LSH
+    * signature table: the deterministic k-means model is trained once per
+    * corpus snapshot ([[graft.spark.Ivf.kmeansModel]]), the index built
+    * and persisted, and the centroid table rides beside it the way the
+    * lineage sidecar rides beside the sink.
     */
-  private val ivfCache = new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
   private val ivfLists = 16
   private val ivfProbe = 4
   private val ivfIters = 2
   private def embIvf(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    ivfCache.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ => {
+    memo("ivf", s, dir) {
       val emb = t(s, dir, "embeddings")
       val model = graft.spark.Ivf.kmeansModel(emb, nLists = ivfLists, iters = ivfIters)
       (graft.spark.Ivf.ivfIndex(emb, model).persist(),
         graft.spark.Ivf.centroidTable(s, model))
-    })
+    }
 
   /** IVF ANN top-k over the persisted inverted-file index: queries rank
     * the trained centroid set (deterministic k-means — hash-ordered
@@ -738,11 +719,8 @@ object Queries {
     */
   def e3_cosine_ivf(s: SparkSession, dir: String): DataFrame = {
     val (idx, cents) = embIvf(s, dir)
-    val bal = recordOnce(s, dir, "e3_cosine_ivf", "ivf_list_balance")(
+    recordOnce(s, dir, "e3_cosine_ivf", "ivf_list_balance")(
       graft.spark.Ivf.listBalance(idx, ivfLists))
-    println(f"[e3_cosine_ivf] nLists=$ivfLists used=${bal.getAs[Long]("n_lists_used")} " +
-      f"max_list=${bal.getAs[Long]("max_list")} imbalance=${bal.getAs[Double]("imbalance")}%.2f " +
-      f"status=${bal.getAs[String]("status")}")
     // query vectors from the cached index — no second corpus scan
     val queries = idx.filter($"vec_id" < 5).select($"vec_id", $"v".as("embedding"))
     graft.spark.Ivf.ivfTopK(idx, cents, queries, k = 5, nProbe = ivfProbe)
@@ -796,43 +774,13 @@ object Queries {
       .orderBy($"query_id", $"rk")
   }
 
-  /** Release every session-scoped persisted artifact for this Spark
-    * application (extracted corpus, LSH candidate table, signature table).
-    * Verify/Bench call this when a sfDir's batch is done so persisted
-    * datasets never outlive the batch in a long-lived driver.
+  /** Release every session artifact of this Spark application (the
+    * persisted tables and their checkpoints, registered broadcasts, memos
+    * and coverage rows) through [[graft.spark.SessionArtifacts.release]].
+    * Verify/Bench call this when a sfDir's batch is done so nothing
+    * outlives the batch in a long-lived driver.
     */
-  def releaseCaches(s: SparkSession): Unit = {
-    val prefix = s.sparkContext.applicationId + "|"
-    def drop[D <: org.apache.spark.sql.Dataset[_]](
-        m: java.util.concurrent.ConcurrentHashMap[String, D]): Unit = {
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey.startsWith(prefix)) {
-          e.getValue.unpersist()
-          it.remove()
-        }
-      }
-    }
-    drop(extractedCache)
-    drop(lshCandCache)
-    drop(sigCache)
-    drop(simhashCache)
-    drop(simhashPairsCache)
-    drop(clusterCache)
-    locally {
-      val it = ivfCache.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey.startsWith(prefix)) {
-          e.getValue._1.unpersist() // the centroid table (_2) is a local relation
-          it.remove()
-        }
-      }
-    }
-    sigCountCache.keySet().removeIf(_.startsWith(prefix))
-    coverageOnce.keySet().removeIf(_.startsWith(prefix))
-  }
+  def releaseCaches(s: SparkSession): Unit = graft.spark.SessionArtifacts.release(s)
 
   // ------------------------------------------------------------ registry
 

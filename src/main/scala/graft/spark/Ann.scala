@@ -103,7 +103,7 @@ object Ann {
       while (i < a.length) { s += a(i) * a(i); i += 1 }
       (id, a, math.sqrt(s))
     }
-    val bc = spark.sparkContext.broadcast(all)
+    val bc = SessionArtifacts.broadcast(spark, all)
     val out = rows.mapPartitions { it =>
       val mat = bc.value
       it.flatMap { case (id, vseq) =>
@@ -247,7 +247,7 @@ object Ann {
       .as[(Long, Seq[Double], Double)].collect()
     val vmap = new java.util.HashMap[java.lang.Long, (Array[Double], Double)](vecRows.length * 2)
     vecRows.foreach { case (id, v, n) => vmap.put(id, (v.toArray, n)) }
-    val bc = spark.sparkContext.broadcast(vmap)
+    val bc = SessionArtifacts.broadcast(spark, vmap)
     // HALF_UP round-to-3 can only lift a raw cosine by < 5e-4, so any
     // survivor satisfies raw >= threshold - 1e-3; the double pre-filter
     // rejects the overwhelming mass of sub-threshold candidates without
@@ -518,7 +518,7 @@ object Ann {
         t += 1
       }
     }
-    val bc = spark.sparkContext.broadcast(qIndex)
+    val bc = SessionArtifacts.broadcast(spark, qIndex)
 
     val scored = candidates
       .select(Dedup.requireLongId(col(idCol), "lshCosineTopK"), asDouble(col(vecCol)))
@@ -623,7 +623,7 @@ object Ann {
         t += 1
       }
     }
-    val bc = spark.sparkContext.broadcast(qIndex)
+    val bc = SessionArtifacts.broadcast(spark, qIndex)
     // probe BELOW the row abstraction (same pattern as the d10 scorer):
     // the typed-encoder path boxed all `dims` vector doubles into a Seq
     // for EVERY scanned row, but most corpus rows hit no query bucket —

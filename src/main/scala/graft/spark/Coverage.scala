@@ -2,6 +2,8 @@ package graft.spark
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
+import scala.jdk.CollectionConverters._
+
 /** One recorded coverage/balance report (top-level so Spark's product
   * encoder derives cleanly — nested-object case classes trip scala
   * reflection under the typed layer).
@@ -25,12 +27,20 @@ final case class CoverageEntry(
   * coexist in one table. [[graft.Verify]] dumps the table beside the query
   * results; production runs would [[persist]] it through the same
   * [[TableIO]] seam as the lineage sidecar.
+  *
+  * Entries are kept per Spark application, as a [[SessionArtifacts]]
+  * artifact: [[graft.Queries.releaseCaches]] drops them with the rest of
+  * the application's session state, so read or [[persist]] the table
+  * before releasing.
   */
 object Coverage {
 
   type Entry = CoverageEntry
 
-  private val entries = new java.util.concurrent.ConcurrentLinkedQueue[CoverageEntry]()
+  /** `spark`'s application's entries, in recording order. */
+  private def entries(spark: SparkSession): java.util.concurrent.ConcurrentLinkedQueue[CoverageEntry] =
+    SessionArtifacts.memo("coverage", spark, "")(
+      new java.util.concurrent.ConcurrentLinkedQueue[CoverageEntry]())
 
   /** Record the (1-row) `report` DataFrame for `query`. Numeric columns
     * land in the metrics map; a `status` column is lifted (absent →
@@ -53,19 +63,20 @@ object Coverage {
       if (schema.fieldNames.contains("status") && !row.isNullAt(schema.fieldIndex("status")))
         row.getString(schema.fieldIndex("status"))
       else "ok"
-    entries.add(CoverageEntry(query, kind, status,
+    entries(report.sparkSession).add(CoverageEntry(query, kind, status,
       new java.sql.Timestamp(System.currentTimeMillis()), metrics))
     row
   }
 
-  /** Everything recorded in this JVM so far, as a queryable DataFrame —
-    * FLATTENED to one (query, kind, status, recorded_at, metric, value)
-    * row per metric. The earlier `metrics: Map[String,Double]` column made
-    * the persisted `_coverage` sidecar unreadable to flat-table consumers
-    * (the round-6 correctness driver's pandas sort crashed on the
-    * unhashable map values); scalar columns keep the registry queryable
-    * by ANY reader. Built with an explicit schema (the scala-2.13
-    * reflection encoder trips a RefinedType MatchError under Spark 4).
+  /** Everything `spark`'s application recorded since its last release, as
+    * a queryable DataFrame — FLATTENED to one (query, kind, status,
+    * recorded_at, metric, value) row per metric. The earlier
+    * `metrics: Map[String,Double]` column made the persisted `_coverage`
+    * sidecar unreadable to flat-table consumers (the round-6 correctness
+    * driver's pandas sort crashed on the unhashable map values); scalar
+    * columns keep the registry queryable by ANY reader. Built with an
+    * explicit schema (the scala-2.13 reflection encoder trips a
+    * RefinedType MatchError under Spark 4).
     */
   def table(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.types._
@@ -77,7 +88,7 @@ object Coverage {
       StructField("metric", StringType),
       StructField("value", DoubleType)))
     val rows = new java.util.ArrayList[Row]()
-    val it = entries.iterator()
+    val it = entries(spark).iterator()
     while (it.hasNext) {
       val e = it.next()
       // deterministic metric order within an entry (map order is not); an
@@ -92,16 +103,12 @@ object Coverage {
     spark.createDataFrame(rows, schema)
   }
 
-  /** Latest recorded entry for `query`, if any (spec/assertion surface). */
-  def latest(query: String): Option[CoverageEntry] = {
-    var found: Option[CoverageEntry] = None
-    val it = entries.iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.query == query) found = Some(e)
-    }
-    found
-  }
+  /** Latest entry recorded for `query` by the active (else default)
+    * session's application, if any (spec/assertion surface).
+    */
+  def latest(query: String): Option[CoverageEntry] =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .flatMap(s => entries(s).asScala.filter(_.query == query).lastOption)
 
   /** Write the recorded table through the [[TableIO]] seam — the same
     * sidecar mechanics as the extraction lineage, so at production scale
@@ -109,6 +116,4 @@ object Coverage {
     */
   def persist(spark: SparkSession, io: TableIO, path: String): Unit =
     io.write(table(spark), path)
-
-  def clear(): Unit = entries.clear()
 }

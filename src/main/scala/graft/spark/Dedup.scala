@@ -728,7 +728,9 @@ object Dedup {
         while (parent.get(c) != r) { val nxt = parent.get(c); parent.put(c, r); c = nxt }
         r
       }
-      edges.select(col("src"), col("dst")).as[(Long, Long)].collect().foreach {
+      val edgeRows = edges.select(col("src"), col("dst")).as[(Long, Long)].collect()
+      SessionArtifacts.unpersist(edges)
+      edgeRows.foreach {
         case (a, b) =>
           if (!parent.containsKey(a)) parent.put(a, a)
           if (!parent.containsKey(b)) parent.put(b, b)
@@ -773,15 +775,19 @@ object Dedup {
         .agg(min(col("nbr_label")).as("label"))
         .localCheckpoint()
       val nextSum = labelSum(next)
-      labels.unpersist()
+      // a plain unpersist() leaves a checkpoint's blocks in place
+      SessionArtifacts.unpersist(labels)
       labels = next
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
       it += 1
     }
-    if (!converged)
+    SessionArtifacts.unpersist(edges)
+    if (!converged) {
+      SessionArtifacts.unpersist(labels)
       sys.error(s"dupClusters: not converged after $maxIters iterations — " +
         "pair graph has pathological diameter; raise maxIters explicitly")
+    }
     labels.withColumnRenamed("label", "cluster_id")
   }
 }

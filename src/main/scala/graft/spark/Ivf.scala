@@ -257,7 +257,7 @@ object Ivf {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(model.centroids)
+    val bc = SessionArtifacts.broadcast(spark, model.centroids)
     val fp = model.fingerprint
     vectors
       .select(Dedup.requireLongId(col(idCol), "Ivf.ivfIndex"),
@@ -381,7 +381,7 @@ object Ivf {
         }
       }
     }
-    val bc = spark.sparkContext.broadcast(probeIndex)
+    val bc = SessionArtifacts.broadcast(spark, probeIndex)
     val scored = index
       .select(col("vec_id"), col("v"), col("norm"), col("list_id"), col("model_fp"))
       .as[(Long, Seq[Double], Double, Long, String)]

@@ -2,10 +2,8 @@ package graft.spark
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.Event
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import java.sql.Timestamp
 
 class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -636,13 +634,27 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("releaseCaches unpersists every session-scoped artifact") {
     val s = spark
-    import s.implicits._
-    // touch the shared signature-table cache through a registered query
-    graft.Queries.all("e2_cosine_lsh")(s, "/root/testdata/sf0.001").count()
-    assert(s.sparkContext.getPersistentRDDs.nonEmpty)
+    val dir = "/root/testdata/sf0.001"
+    def run(key: String): Unit = graft.Queries.all(key)(s, dir).count()
+    def persisted = s.sparkContext.getPersistentRDDs.keySet
+    // every key that builds a session artifact
+    Seq("x1_extract", "d7_minhash_lsh_pairs", "d9_simhash", "d11_simhash_pairs",
+      "d15_dup_clusters", "d10_embed_dup", "e2_cosine_lsh", "e3_cosine_ivf").foreach(run)
+    assert(persisted.nonEmpty)
+    // the nested simhash artifacts (d15 → pairs → signatures) are built once
+    val built = persisted
+    Seq("d9_simhash", "d11_simhash_pairs", "d15_dup_clusters").foreach(run)
+    assert(persisted == built, s"re-running d9/d11/d15 persisted ${persisted -- built}")
+    val broadcasts = SessionArtifacts.held(s).collect {
+      case b: org.apache.spark.broadcast.Broadcast[_] => b
+    }
+    assert(broadcasts.nonEmpty)
+    assert(Coverage.table(s).count() > 0)
     graft.Queries.releaseCaches(s)
     assert(s.sparkContext.getPersistentRDDs.isEmpty,
       s.sparkContext.getPersistentRDDs.values.map(_.name).mkString(", "))
+    broadcasts.foreach(b => intercept[org.apache.spark.SparkException](b.value))
+    assert(Coverage.table(s).count() == 0)
   }
 
   test("coverage registry: capped operators record queryable rows; degradation flips status") {
@@ -697,13 +709,20 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // empty pair set → empty clustering (singletons are implicit)
     assert(Dedup.dupClusters(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")).count() == 0)
     // the distributed fixpoint (maxDriverPairs = 0 forces it) agrees with
-    // the driver union-find fast path on both shapes
+    // the driver union-find fast path on both shapes. Neither path leaves
+    // a checkpoint behind but the distributed path's returned labels.
+    def persisted = s.sparkContext.getPersistentRDDs.size
     for (p <- Seq(pairs, chain)) {
+      val before = persisted
       val fast = Dedup.dupClusters(p).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = Dedup.dupClusters(p, maxDriverPairs = 0).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(persisted == before)
+      val distDf = Dedup.dupClusters(p, maxDriverPairs = 0)
+      assert(persisted == before + 1)
+      val dist = distDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(fast == dist, s"fast=$fast dist=$dist")
+      SessionArtifacts.unpersist(distDf)
+      assert(persisted == before)
     }
     // the safety valve throws rather than returning a half-converged
     // labeling (distributed path — the fast path needs no iterations)
@@ -776,8 +795,10 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(d13.length == 1, d13.mkString(", "))
       assert(d13(0).getLong(0) == 1L && d13(0).getLong(1) == 2L &&
         d13(0).getString(2) == "p q r s", d13(0).toString)
-    } finally
+    } finally {
+      graft.Queries.releaseCaches(s)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 
   test("word ops: d14 source mix matches a JVM replay of the integer hash decision; rate-1.0 keeps all") {
@@ -811,81 +832,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("streaming: windowed counts with watermark over MemoryStream") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val mem = MemoryStream[Event]
-    val q = graft.streaming.EventStream.windowedCounts(mem.toDF())
-      .writeStream.format("memory").queryName("win_counts")
-      .outputMode("update").start()
-    def ts(min: Int) = new Timestamp(3600_000L * 24 + min * 60_000L)
-    mem.addData(
-      Event(1, ts(0), 10, "click", 1.0),
-      Event(2, ts(10), 11, "click", 2.0),
-      Event(3, ts(70), 10, "view", 5.0))
-    q.processAllAvailable()
-    val rows = s.sql("select event_type, n_events, sum_value from win_counts").collect()
-    assert(rows.exists(r => r.getString(0) == "click" && r.getLong(1) == 2 && r.getDouble(2) == 3.0))
-    assert(rows.exists(r => r.getString(0) == "view" && r.getLong(1) == 1))
-    q.stop()
-  }
-
-  test("streaming: ingest dedup drops re-delivered event ids within the watermark") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val mem = MemoryStream[Event]
-    val q = graft.streaming.EventStream.dedupEvents(mem.toDF())
-      .writeStream.format("memory").queryName("dedup_events")
-      .outputMode("append").start()
-    def ts(min: Int) = new Timestamp(3600_000L * 72 + min * 60_000L)
-    mem.addData(
-      Event(1, ts(0), 10, "click", 1.0),
-      Event(1, ts(0), 10, "click", 1.0), // same-batch duplicate
-      Event(2, ts(1), 11, "view", 2.0))
-    q.processAllAvailable()
-    // cross-batch re-delivery of event 1 within the watermark horizon
-    mem.addData(Event(1, ts(2), 10, "click", 1.0), Event(3, ts(3), 12, "click", 3.0))
-    q.processAllAvailable()
-    val ids = s.sql("select event_id from dedup_events").collect().map(_.getLong(0)).sorted
-    q.stop()
-    assert(ids.toSeq == Seq(1L, 2L, 3L), s"got ${ids.toSeq}")
-  }
-
-  test("streaming: content dedup drops same-normalized-text docs across distinct doc_ids") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val mem = MemoryStream[(Long, Timestamp, String)]
-    val q = graft.streaming.EventStream.dedupDocsByFingerprint(
-        mem.toDF().toDF("doc_id", "ts", "text"))
-      .writeStream.format("memory").queryName("dedup_docs")
-      .outputMode("append").start()
-    def ts(min: Int) = new Timestamp(3600_000L * 96 + min * 60_000L)
-    mem.addData(
-      (1L, ts(0), "The Quick  Brown fox"),
-      (2L, ts(0), "the quick brown fox"), // normalization twin of 1 — dropped
-      (3L, ts(1), "something else entirely"))
-    q.processAllAvailable()
-    // cross-batch re-crawl under yet another doc_id, still within horizon
-    mem.addData((4L, ts(2), "THE QUICK\tBROWN FOX"), (5L, ts(3), "fresh content"))
-    q.processAllAvailable()
-    val kept = s.sql("select doc_id from dedup_docs").collect().map(_.getLong(0)).sorted
-    q.stop()
-    assert(kept.toSeq == Seq(1L, 3L, 5L), s"got ${kept.toSeq}")
-    // the streaming fingerprint IS the batch d5 definition — one
-    // normalization (Dedup.normalizeJvm ≡ column form, spec'd elsewhere)
-    // then md5, so stream and corpus dedup share the key space
-    val fp = s.sql("select distinct fingerprint from dedup_docs where doc_id = 1")
-      .collect()(0).getString(0)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val expect = md.digest("the quick brown fox"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map(b => f"$b%02x").mkString
-    assert(fp == expect, s"$fp != $expect")
-  }
-
   test("streaming: incremental extraction matches the batch pipeline result") {
     implicit val s: SparkSession = spark
     import s.implicits._
@@ -916,30 +862,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (cfg == small)
         assert(batch.find(_.doc_id == "giant").map(_.error).contains("span_text_bytes=6140"))
     }
-  }
-
-  test("streaming: stateful sessionization closes sessions after gap") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val mem = MemoryStream[Event]
-    val q = graft.streaming.EventStream.sessionize(mem.toDS())(s)
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("append").start()
-    def ts(min: Int) = new Timestamp(3600_000L * 48 + min * 60_000L)
-    // two bursts for user 10, 90 minutes apart → first session closes
-    mem.addData(
-      Event(1, ts(0), 10, "click", 1.0),
-      Event(2, ts(5), 10, "click", 2.0))
-    q.processAllAvailable()
-    mem.addData(Event(3, ts(95), 10, "click", 4.0))
-    q.processAllAvailable()
-    mem.addData(Event(4, ts(200), 99, "view", 1.0)) // advance watermark
-    q.processAllAvailable()
-    val rows = s.sql("select user_id, n_events, total_value from sessions where closed").collect()
-    assert(rows.exists(r => r.getLong(0) == 10 && r.getLong(1) == 2 && r.getDouble(2) == 3.0),
-      s"got: ${rows.mkString(",")}")
-    q.stop()
   }
 
   test("multimodal: media table → stubbed decode → features + dedup") {
