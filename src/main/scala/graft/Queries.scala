@@ -337,17 +337,13 @@ object Queries {
       .orderBy($"doc_a", $"doc_b")
   }
 
-  /** SimHash fingerprints — portable md5-derived 60-bit family
-    * ([[graft.spark.Dedup.simhashPortableDf]]), so the full tokenize →
-    * hash → majority-vote stack replays in the DuckDB oracle (the same
-    * trick that bought d6/d7 their hard oracles). The 64-bit xxhash64
-    * variant remains as [[graft.spark.Dedup.simhashDf]] with its own
-    * JVM≡column parity spec.
-    */
-  /** The portable SimHash fingerprint table, a session artifact — the
-    * REUSABLE table shared by d9 (the fingerprint surface) and d11 (the
-    * banded near-dup search): in production it is minted once per corpus
-    * snapshot, same economics as the sign-LSH signature table.
+  /** The SimHash fingerprint table, a session artifact — portable
+    * md5-derived 60-bit family ([[graft.spark.Dedup.simhashPortableDf]]),
+    * so the full tokenize → hash → majority-vote stack replays in the
+    * DuckDB oracle (the same trick that bought d6/d7 their hard oracles).
+    * It is the REUSABLE table shared by d9 (the fingerprint surface) and
+    * d11 (the banded near-dup search): in production it is minted once per
+    * corpus snapshot, same economics as the sign-LSH signature table.
     */
   private[graft] def simhashSigs(s: SparkSession, dir: String): DataFrame =
     memo("simhash_sigs", s, dir)(
@@ -733,9 +729,7 @@ object Queries {
     * (stubbed) decode → deterministic features. The projected columns are
     * the decode-independent half (byte counts + content hashes), which the
     * DuckDB oracle replays exactly; width/height/features from the stub
-    * stay spec-tested (OpsSpec). The extraction-derived media table
-    * ([[graft.spark.Multimodal.mediaTable]]) keeps its own OpsSpec
-    * coverage.
+    * stay spec-tested (OpsSpec).
     */
   def m1_media_features(s: SparkSession, dir: String): DataFrame = {
     implicit val sp: SparkSession = s
@@ -752,8 +746,7 @@ object Queries {
     * scale the query side is broadcast so the big side never shuffles.
     */
   def e1_cosine_topk(s: SparkSession, dir: String): DataFrame = {
-    def dot(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
+    import graft.spark.Ann.dot
     // norms are precomputed per VECTOR (one dot each side of the join)
     // instead of per PAIR — sqrt(dot(v,v)) yields the same IEEE bits
     // wherever it is evaluated, so the cosine is bit-identical while the

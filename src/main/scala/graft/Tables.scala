@@ -21,9 +21,4 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String,
       io: graft.spark.TableIO = defaultIo): DataFrame =
     io.read(spark, s"$sfDir/$name.parquet")
-
-  /** Register all tables as temp views so queries can use spark.sql. */
-  def registerAll(spark: SparkSession, sfDir: String,
-      io: graft.spark.TableIO = defaultIo): Unit =
-    names.foreach(n => load(spark, sfDir, n, io).createOrReplaceTempView(n))
 }

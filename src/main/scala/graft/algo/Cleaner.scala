@@ -9,9 +9,9 @@ import scala.collection.mutable.ArrayBuffer
   */
 final class Cleaner(dom: Dom, opts: Options,
     allowConditionalCleaning: Boolean, allowWeightClasses: Boolean,
-    /** site-rule dispatch: phase name + articleContent (registry phases
+    /** the document's site-rule context (registry phases
       * `SiteRuleRegistry.swift:218-303`) */
-    siteRuleHook: (String, Int) => Unit = (_, _) => ()) {
+    siteCtx: SiteRules.Ctx) {
 
   private val dataTables = new java.util.HashSet[Integer]()
 
@@ -52,12 +52,12 @@ final class Cleaner(dom: Dom, opts: Options,
       cleanConditionally(articleContent, "form")
       cleanConditionally(articleContent, "fieldset")
     }
-    siteRuleHook("share", articleContent)
+    SiteRules.applyShareRules(articleContent, siteCtx)
     removeShortShareElements(articleContent)
     removeAll(articleContent, "input, textarea, select, button")
     removeShortLinkHeavyDivs(articleContent)
     removeRelatedLinkCollectionDivs(articleContent)
-    siteRuleHook("pre-conversion", articleContent)
+    SiteRules.applyPreConversionRules(articleContent, siteCtx)
     removeSingleItemPromoLists(articleContent)
     removeEmptyContainerDivs(articleContent)
     removeShortRoleNoteCallouts(articleContent)
@@ -83,7 +83,7 @@ final class Cleaner(dom: Dom, opts: Options,
     removeAll(root, "footer, aside, link")
     removeExplicitNoContentContainers(root)
     removeKnownWidgetElements(root)
-    siteRuleHook("unwanted-elements", root)
+    SiteRules.applyUnwantedElementRules(root, siteCtx)
     removeDisallowedEmbeds(root)
     // hidden elements
     var cur = dom.nextInTree(root, root)
@@ -304,7 +304,7 @@ final class Cleaner(dom: Dom, opts: Options,
   }
 
   private def isAllowedVideoEmbed(id: Int): Boolean = {
-    val p = opts.allowedVideoRegex
+    val p = Config.videos
     val a = dom.attrs(id)
     if (a != null) {
       var i = 1
@@ -725,8 +725,8 @@ final class Cleaner(dom: Dom, opts: Options,
     else if (input > p / 3) shouldRemove = true
     else if (!isList && !isFigureChild && headingDensity < 0.9 && contentLength < 25 &&
         (img == 0 || img > 2) && density > 0) shouldRemove = true
-    else if (!isList && weight < 25 && density > (0.2 + opts.linkDensityModifier)) shouldRemove = true
-    else if (weight >= 25 && density > (0.5 + opts.linkDensityModifier)) shouldRemove = true
+    else if (!isList && weight < 25 && density > 0.2) shouldRemove = true
+    else if (weight >= 25 && density > 0.5) shouldRemove = true
     else if ((embedCount == 1 && contentLength < 75) || embedCount > 1) shouldRemove = true
     else if (img == 0 && tDensity == 0) shouldRemove = true
 
@@ -1064,10 +1064,9 @@ final class Cleaner(dom: Dom, opts: Options,
   def postProcessArticle(articleContent: Int): Unit = {
     removeExtraBRs(articleContent)
     removeEmptyParagraphs(articleContent)
-    siteRuleHook("post-paragraph", articleContent)
     removeAdvertisementPlaceholders(articleContent)
     replaceH1WithH2(articleContent)
-    siteRuleHook("post-process", articleContent)
+    SiteRules.applyPostProcessRules(articleContent, siteCtx)
     handleSingleCellTables(articleContent)
   }
 

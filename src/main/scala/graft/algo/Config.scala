@@ -41,27 +41,13 @@ object Config {
   val videos: Pattern = ci(
     "\\/\\/(www\\.)?((dailymotion|youtube|youtube-nocookie|player\\.vimeo|v\\.qq|bilibili|live.bilibili)\\.com|(archive|upload\\.wikimedia)\\.org|player\\.twitch\\.tv)")
 
-  val shareElements: Pattern = ci("(\\b|_)(share|sharedaddy)(\\b|_)")
-
   val hashUrl: Pattern = Pattern.compile("^#.+")
-
-  val b64DataUrl: Pattern = ci("^data:\\s*([^\\s;,]+)\\s*;\\s*base64\\s*,")
 
   /** Comma code points counted by the scorer (ASCII, Arabic, CJK forms). */
   val commas: Pattern = Pattern.compile(
     "[\\u002C\\u060C\\uFE50\\uFE10\\uFE11\\u2E41\\u2E34\\u2E32\\uFF0C]")
 
-  val adWords: Pattern = Pattern.compile(
-    "^(ad(vertising|vertisement)?|pub(licité)?|werb(ung)?|广告|Реклама|Anzeige)$",
-    Pattern.CASE_INSENSITIVE | Pattern.UNICODE_CASE)
-
-  val loadingWords: Pattern = Pattern.compile(
-    "^((loading|正在加载|Загрузка|chargement|cargando)(…|\\.\\.\\.)?)$",
-    Pattern.CASE_INSENSITIVE | Pattern.UNICODE_CASE)
-
   val srcsetUrl: Pattern = Pattern.compile("(\\S+)(\\s+[\\d.]+[xw])?(\\s*(?:,|$))")
-
-  val titleSeparators: Pattern = Pattern.compile("\\s[\\|\\-\\\\\\/>»–—]\\s")
 
   val unlikelyRoles: Set[String] = Set(
     "menu", "menubar", "complementary", "navigation", "alert", "alertdialog", "dialog")
@@ -88,17 +74,6 @@ object Config {
 
   val classesToPreserveDefault: Seq[String] = Seq("page")
 
-  val lazyImageAttributes: Seq[String] = Seq(
-    "data-src", "data-srcset", "data-original", "data-url")
-
-  val jsonLdArticleTypes: Set[String] = Set(
-    "Article", "AdvertiserContentArticle", "NewsArticle", "AnalysisNewsArticle",
-    "AskPublicNewsArticle", "BackgroundNewsArticle", "OpinionNewsArticle",
-    "ReportageNewsArticle", "ReviewNewsArticle", "Report", "SatiricalArticle",
-    "ScholarlyArticle", "MedicalScholarlyArticle", "SocialMediaPosting",
-    "BlogPosting", "LiveBlogPosting", "DiscussionForumPosting", "TechArticle",
-    "APIReference")
-
   // sibling merge
   final val SiblingScoreThresholdMinimum = 10.0
   final val SiblingScoreThresholdRatio = 0.2
@@ -116,15 +91,14 @@ object Config {
   @inline def charLen(s: String): Int = s.codePointCount(0, s.length)
 }
 
-/** Options mirroring ReadabilityOptions (Swift:4-66). */
+/** The ReadabilityOptions (Swift:4-66) fields a caller sets. The rest of
+  * that surface is fixed at the reference defaults: [[Config.NTopCandidates]]
+  * top candidates, [[Config.videos]] as the allowed-embed pattern, class
+  * cleaning and JSON-LD metadata always on, no link-density modifier.
+  */
 final case class Options(
-    nbTopCandidates: Int = Config.NTopCandidates,
     charThreshold: Int = Config.DefaultCharThreshold,
-    keepClasses: Boolean = false,
-    disableJsonLd: Boolean = false,
-    classesToPreserve: Seq[String] = Nil,
-    allowedVideoRegex: Pattern = Config.videos,
-    linkDensityModifier: Double = 0.0)
+    classesToPreserve: Seq[String] = Nil)
 
 /** Extraction result mirroring ReadabilityResult (Swift:3-37), content as
   * the cleaned article DOM root (span/HTML serialization applied by the

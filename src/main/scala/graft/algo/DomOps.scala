@@ -1,6 +1,6 @@
 package graft.algo
 
-import graft.html.{Dom, Select}
+import graft.html.Dom
 import scala.collection.mutable.ArrayBuffer
 
 /** Shared per-node predicates and measurements used by extraction and
@@ -494,10 +494,6 @@ object DomOps {
     next
   }
 
-  /** Count of descendant elements with any of the tags. */
-  def countTags(dom: Dom, id: Int, ts: Set[String]): Int =
-    dom.getElementsByTags(id, ts).size
-
   /** Mozilla _textSimilarity: token overlap of b's tokens found in a. */
   def textSimilarity(a: String, b: String): Double = {
     val tokensA = a.toLowerCase.split("\\W+").filter(_.nonEmpty)
@@ -516,7 +512,4 @@ object DomOps {
     dom.tag(id) = t
     id
   }
-
-  def selectAll(dom: Dom, root: Int, sel: String): Array[Int] =
-    Select.select(dom, root, sel)
 }

@@ -15,18 +15,9 @@ final class Grab(
     articleTitle: String,
     /** clone-and-clean text length for pass acceptance (G1). */
     acceptanceTextLength: (Int, Int) => Int,
-    /** site-rule hook: byline extracted but container kept in the DOM */
-    keepBylineContainer: Int => Boolean = _ => false,
-    /** site-rule hook: explicit sibling include/exclude decision */
-    siblingDecision: (Int, Int) => Option[Boolean] = (_, _) => None,
-    /** site-rule hook: extract a node (clone) from a pre-candidate sibling
-      * and consume the sibling (`SiteRuleRegistry.siblingExtraction`)
-      */
-    siblingExtraction: (Int, Int) => Int = (_, _) => -1,
-    /** site-rule hook: candidate promotion (`promotedCandidate`) */
-    promoteCandidateRule: Int => Int = identity,
-    /** site-rule hook: protect the candidate from wrapper promotion */
-    keepCandidateRule: Int => Boolean = _ => false) {
+    /** the document's site-rule context (byline retention, candidate
+      * promotion and protection, sibling decisions and extraction) */
+    siteCtx: SiteRules.Ctx) {
 
   import Config._
 
@@ -278,7 +269,7 @@ final class Grab(
         val ms = matchString(node)
         val byline = checkByline(node, ms)
         if (byline.isDefined) {
-          if (!keepBylineContainer(node)) dom.remove(node)
+          if (!SiteRules.shouldKeepBylineContainer(node, siteCtx)) dom.remove(node)
           return byline
         }
       }
@@ -636,9 +627,9 @@ final class Grab(
       if (score > 0) {
         var idx = 0
         while (idx < top.length && top(idx)._2 >= score) idx += 1
-        if (idx < opts.nbTopCandidates) {
+        if (idx < NTopCandidates) {
           top.insert(idx, (el, score))
-          if (top.length > opts.nbTopCandidates) top.remove(top.length - 1)
+          if (top.length > NTopCandidates) top.remove(top.length - 1)
         }
       }
       i += 1
@@ -692,7 +683,7 @@ final class Grab(
   }
 
   private def shouldKeepCurrentCandidate(id: Int): Boolean = {
-    if (keepCandidateRule(id)) return true
+    if (SiteRules.shouldKeepCandidate(id, siteCtx)) return true
     if (dom.tag(id) != "article") return false
     dom.idAttr(id).trim.toLowerCase == "story"
   }
@@ -779,7 +770,7 @@ final class Grab(
   // ----------------------------------------------------------------- G12
 
   private def promoteSchemaArticleParentIfNeeded(candidate: Int): Int = {
-    val promoted = promoteCandidateRule(candidate)
+    val promoted = SiteRules.promotedCandidate(candidate, siteCtx)
     if (promoted != candidate) return promoted
     if (dom.tag(candidate) == "section") {
       val ip = Option(dom.attr(candidate, "itemprop")).getOrElse("").toLowerCase
@@ -850,7 +841,7 @@ final class Grab(
     val consumed = new java.util.HashSet[Integer]()
     var li = 0
     while (li < siblings.length && siblings(li) != topCandidate) {
-      val extracted = siblingExtraction(siblings(li), topCandidate)
+      val extracted = SiteRules.siblingExtraction(siblings(li), topCandidate, siteCtx)
       if (extracted != -1) {
         Inspect.log("sibling")(s"${Inspect.describe(dom, siblings(li))} decision=extract")
         leadingElements += extracted
@@ -868,7 +859,7 @@ final class Grab(
       } else {
       if (sibling == topCandidate) append = true
       else if (isProbablyVisible(dom, sibling)) {
-        val ruleDecision = siblingDecision(sibling, topCandidate)
+        val ruleDecision = SiteRules.siblingInclusionDecision(sibling, topCandidate, siteCtx)
         var contentBonus = 0.0
         if (topCandidateClassName.nonEmpty && dom.className(sibling) == topCandidateClassName)
           contentBonus = topScore * Config.SiblingClassNameBonusRatio

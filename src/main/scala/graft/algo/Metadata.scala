@@ -28,8 +28,8 @@ object Metadata {
   /** M1+M2+M3: JSON-LD preferred, meta tags fill gaps. Runs BEFORE
     * prepDocument so ld+json scripts still exist.
     */
-  def extract(dom: Dom, disableJsonLd: Boolean): Meta = {
-    val m = if (disableJsonLd) Meta() else extractJsonLd(dom)
+  def extract(dom: Dom): Meta = {
+    val m = extractJsonLd(dom)
     val mm = extractMetaTags(dom)
     // NOTE: no Mozilla-style _unescapeHtmlEntities pass — the reference
     // keeps metadata values as parsed (its 005 test asserts content+title
@@ -40,37 +40,6 @@ object Metadata {
       excerpt = nonEmpty(m.excerpt).orElse(nonEmpty(mm.excerpt)),
       siteName = nonEmpty(m.siteName).orElse(nonEmpty(mm.siteName)),
       publishedTime = nonEmpty(m.publishedTime).orElse(nonEmpty(mm.publishedTime)))
-  }
-
-  private val namedEscape = Pattern.compile("&(quot|amp|apos|lt|gt);")
-  private val numericEscape = Pattern.compile("&#(?:x([0-9a-fA-F]+)|([0-9]+));")
-
-  /** Mozilla _unescapeHtmlEntities: second decode for double-encoded
-    * metadata values; invalid/surrogate/overflow code points → U+FFFD.
-    */
-  def unescapeHtmlEntities(s: String): String = {
-    if (s == null || !s.contains("&")) return s
-    val map = Map("quot" -> "\"", "amp" -> "&", "apos" -> "'", "lt" -> "<", "gt" -> ">")
-    var out = {
-      val m = namedEscape.matcher(s)
-      val sb = new StringBuffer()
-      while (m.find()) m.appendReplacement(sb, java.util.regex.Matcher.quoteReplacement(map(m.group(1))))
-      m.appendTail(sb)
-      sb.toString
-    }
-    val m = numericEscape.matcher(out)
-    val sb = new StringBuffer()
-    while (m.find()) {
-      val numStr = if (m.group(1) != null) m.group(1) else m.group(2)
-      val radix = if (m.group(1) != null) 16 else 10
-      val num = try {
-        val v = java.lang.Long.parseLong(numStr, radix)
-        if (v == 0 || v > 0x10ffff || (v >= 0xd800 && v <= 0xdfff)) 0xfffd else v.toInt
-      } catch { case _: NumberFormatException => 0xfffd }
-      m.appendReplacement(sb, java.util.regex.Matcher.quoteReplacement(new String(Character.toChars(num))))
-    }
-    m.appendTail(sb)
-    sb.toString
   }
 
   // ------------------------------------------------------------- JSON-LD

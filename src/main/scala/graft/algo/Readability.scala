@@ -51,6 +51,7 @@ object Readability {
 
     // 1. source URL (site-rule gating input; also og:url/canonical)
     val sourceUrl = Prep.detectSourceUrl(dom, docLocation)
+    val siteCtx = SiteRules.Ctx(dom, sourceUrl)
 
     // 2. noscript image unwrap (P3)
     Prep.unwrapNoscriptImages(dom)
@@ -59,15 +60,14 @@ object Readability {
     Prep.promoteReadableNoscriptFallbacks(dom, opts.charThreshold)
 
     // 4. metadata BEFORE prepDocument (keeps ld+json scripts)
-    val metadata = Metadata.extract(dom, opts.disableJsonLd)
-    metadata.byline = SiteRules.applyMetadataBylineRules(
-      metadata.byline, SiteRules.Ctx(dom, sourceUrl))
+    val metadata = Metadata.extract(dom)
+    metadata.byline = SiteRules.applyMetadataBylineRules(metadata.byline, siteCtx)
 
     // 5. prepDocument (P5–P8)
     Prep.prepDocument(dom)
 
     // 6. pre-extraction site rules (`Readability.swift:64`)
-    SiteRules.applyPreExtractionRules(SiteRules.Ctx(dom, sourceUrl))
+    SiteRules.applyPreExtractionRules(siteCtx)
 
     // 7. title
     val title = metadata.title.getOrElse(Metadata.extractTitle(dom))
@@ -77,14 +77,6 @@ object Readability {
     // content (prepArticle is deterministic for fixed flags, so cleaning
     // the original again would do identical work twice — ~40% of per-doc
     // cost on the hot path).
-    val siteCtx = SiteRules.Ctx(dom, sourceUrl)
-    val cleanerHook: (String, Int) => Unit = (phase, node) => phase match {
-      case "post-process" => SiteRules.applyPostProcessRules(node, siteCtx)
-      case "pre-conversion" => SiteRules.applyPreConversionRules(node, siteCtx)
-      case "unwanted-elements" => SiteRules.applyUnwantedElementRules(node, siteCtx)
-      case "share" => SiteRules.applyShareRules(node, siteCtx)
-      case _ => ()
-    }
     var lastClone = -1
     var lastCloneSource = -1
     var lastCloneFlags = -1
@@ -93,7 +85,7 @@ object Readability {
       val cleaner = new Cleaner(dom, opts,
         allowConditionalCleaning = (flags & Config.FlagCleanConditionally) != 0,
         allowWeightClasses = (flags & Config.FlagWeightClasses) != 0,
-        siteRuleHook = cleanerHook)
+        siteCtx = siteCtx)
       cleaner.prepArticle(clone)
       lastClone = clone
       lastCloneSource = content
@@ -101,12 +93,7 @@ object Readability {
       textLength(dom, clone)
     }
 
-    val grab = new Grab(dom, opts, title, acceptanceTextLength,
-      keepBylineContainer = SiteRules.shouldKeepBylineContainer(_, siteCtx),
-      siblingDecision = SiteRules.siblingInclusionDecision(_, _, siteCtx),
-      siblingExtraction = SiteRules.siblingExtraction(_, _, siteCtx),
-      promoteCandidateRule = SiteRules.promotedCandidate(_, siteCtx),
-      keepCandidateRule = SiteRules.shouldKeepCandidate(_, siteCtx))
+    val grab = new Grab(dom, opts, title, acceptanceTextLength, siteCtx)
     val grabResult = grab.extract() match {
       case Right(r) => r
       case Left((actual, threshold)) =>
@@ -132,7 +119,7 @@ object Readability {
       val cleaner = new Cleaner(dom, opts,
         allowConditionalCleaning = (grabResult.flags & Config.FlagCleanConditionally) != 0,
         allowWeightClasses = (grabResult.flags & Config.FlagWeightClasses) != 0,
-        siteRuleHook = cleanerHook)
+        siteCtx = siteCtx)
       if (!reuseClone) cleaner.prepArticle(articleContent)
       cleaner.postProcessArticle(articleContent)
       Metadata.removeTitleMatchedHeaders(dom, articleContent, title)
@@ -166,7 +153,7 @@ object Readability {
         val cleaner = new Cleaner(dom, opts,
           allowConditionalCleaning = (att.flags & Config.FlagCleanConditionally) != 0,
           allowWeightClasses = (att.flags & Config.FlagWeightClasses) != 0,
-          siteRuleHook = cleanerHook)
+          siteCtx = siteCtx)
         cleaner.prepArticle(content)
         cleaner.postProcessArticle(content)
         Metadata.removeTitleMatchedHeaders(dom, content, title)
@@ -200,10 +187,8 @@ object Readability {
     post.simplifyNestedElements(finalContent)
     SiteRules.applySerializationRules(finalContent, siteCtx)
     post.normalizeSplitPrintInfo(finalContent)
-    if (!opts.keepClasses) {
-      val preserved = (Config.classesToPreserveDefault ++ opts.classesToPreserve).toSet
-      post.cleanClasses(finalContent, preserved)
-    }
+    post.cleanClasses(finalContent,
+      (Config.classesToPreserveDefault ++ opts.classesToPreserve).toSet)
     post.trimParagraphBoundaryWhitespace(finalContent)
     post.restoreFigureWrapperMetadata(finalContent)
 

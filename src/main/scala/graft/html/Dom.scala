@@ -1,7 +1,5 @@
 package graft.html
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Arena DOM: all nodes of one document live in growable parallel arrays,
   * addressed by Int ids. Mutations (remove / reparent / retag) are O(1)
   * pointer updates; a pass snapshot is an O(n) array copy (used by the
@@ -145,18 +143,6 @@ final class Dom(initialCapacity: Int = 256) {
     if (prev == -1) firstChild(p) = c else nextSib(prev) = c
   }
 
-  /** Insert c immediately after ref (ref must be attached). */
-  def insertAfter(ref: Int, c: Int): Unit = {
-    if (parent(c) != -1) detach(c)
-    val p = parent(ref)
-    val next = nextSib(ref)
-    parent(c) = p
-    nextSib(c) = next
-    prevSib(c) = ref
-    nextSib(ref) = c
-    if (next == -1) lastChild(p) = c else prevSib(next) = c
-  }
-
   /** Detach node from its parent (subtree stays intact, reusable). */
   def detach(c: Int): Unit = {
     val p = parent(c)
@@ -257,10 +243,6 @@ final class Dom(initialCapacity: Int = 256) {
 
   // ------------------------------------------------------------ traversal
 
-  @inline def isElem(id: Int): Boolean = kind(id) == Element
-  @inline def isText(id: Int): Boolean = kind(id) == Text
-  @inline def nameIs(id: Int, t: String): Boolean = kind(id) == Element && tag(id) == t
-
   // primitive Array[Int] results: these run inside every per-document rule
   // loop, and ArrayBuffer[Int] boxes each element (measured allocation)
   def childElements(id: Int): Array[Int] = {
@@ -311,17 +293,6 @@ final class Dom(initialCapacity: Int = 256) {
       cur = parent(cur)
     }
     -1
-  }
-
-  /** All elements under root (inclusive=false) in document order. */
-  def descendantElements(root: Int): ArrayBuffer[Int] = {
-    val out = new ArrayBuffer[Int]()
-    var cur = nextInTree(root, root)
-    while (cur != -1) {
-      if (kind(cur) == Element) out += cur
-      cur = nextInTree(cur, root)
-    }
-    out
   }
 
   /** Elements with given tag under root, document order. root not included. */

@@ -466,12 +466,6 @@ private final class Parser(input: String, private val dom: Dom) {
     */
   private def insertComment(s: String): Unit = ()
 
-  private def currentTarget(): Int =
-    if (stack.nonEmpty) stack.last
-    else if (dom.headEl != -1 && mode == 1) dom.headEl
-    else if (dom.htmlEl != -1) dom.htmlEl
-    else dom.document
-
   private def appendTextToTree(s: String): Unit = {
     if (mode < 2) {
       if (isAllWhitespace(s)) {
@@ -907,7 +901,6 @@ private final class Parser(input: String, private val dom: Dom) {
       if (formattingTags.contains(name)) pushFormatting(el)
       if (formattingMarkers.contains(name)) afe += Marker
     }
-    el
   }
 
   private def attrValue(name: String): String = {

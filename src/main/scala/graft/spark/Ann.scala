@@ -9,15 +9,27 @@ import org.apache.spark.sql.functions._
   * score every candidate, per-query top-k via window rank — the big side
   * never shuffles.
   *
-  * [[lshCosineTopK]] is the scale path: sign-LSH (random hyperplanes with
-  * a deterministic seeded ±1 family) buckets both sides; only bucket-
-  * colliding pairs are scored. At 10^9+ vectors this turns the cross
-  * product into an equi-join on (table, bucket).
+  * [[lshCosineTopKPrecomputed]] is the scale path: sign-LSH (random
+  * hyperplanes with a deterministic seeded ±1 family) buckets both sides
+  * through the shared [[signatureTable]]; only bucket-colliding pairs are
+  * scored. At 10^9+ vectors this turns the cross product into a probe on
+  * (table, bucket).
   */
 object Ann {
 
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
+
+  /** Typed-layer dot product over the common prefix, summed in ascending
+    * index order; shared by the sign-LSH probe and [[Ivf]].
+    */
+  private[spark] def dotJvm(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) { s += a(i) * b(i); i += 1 }
+    s
+  }
 
   /** Scale-aware sub-banding width for the sign-LSH bucket self-join:
     * enough bits that the EXPECTED bucket occupancy n/2^bits stays at or
@@ -75,7 +87,7 @@ object Ann {
   /** Exact embedding-cosine near-duplicate PAIRS: cosine(a, b) ≥ threshold
     * with a < b — the all-pairs BASELINE for bounded tables (tests, recall
     * measurement). The production/corpus-scale operator is
-    * [[cosineDupPairsBucketed]]: sign-LSH bucket self-join → exact verify
+    * [[cosineDupPairsFromSignatures]]: sign-LSH bucket self-join → exact verify
     * on colliding pairs only, no driver materialization. This baseline
     * collects the whole vector table to the driver, so it fails fast past
     * `maxRows` instead of OOMing the driver.
@@ -88,7 +100,7 @@ object Ann {
     val probe = vectors.limit((maxRows + 1).toInt).count()
     require(probe <= maxRows,
       s"cosineDupPairs is the bounded all-pairs baseline (driver-side matrix); " +
-        s"table exceeds maxRows=$maxRows — use cosineDupPairsBucketed " +
+        s"table exceeds maxRows=$maxRows — use cosineDupPairsFromSignatures " +
         s"(sign-LSH bucket self-join + exact verify) for corpus-scale tables")
     // exact all-pairs: broadcast the (contractually in-memory) vector
     // matrix and stream rows against it in the typed layer — interpreted
@@ -133,42 +145,6 @@ object Ann {
     out.toDF("doc_a", "doc_b", "cosine")
   }
 
-  /** Corpus-scale embedding-cosine near-duplicate pairs: sign-LSH bucket
-    * SELF-JOIN (candidates) → exact cosine on colliding pairs only
-    * (verify) — the same candidates→verify shape as
-    * [[Dedup.minhashLshPairs]] → [[Dedup.jaccardPairs]], with the same
-    * degenerate-bucket cap. Nothing is collected to the driver: the plan
-    * is signature scan → capped equi-self-join on (table, bucket) →
-    * distinct pairs → two equi-joins to re-attach vectors → map-side
-    * scoring. Sub-banding uses the low `bucketBits` of each stored table
-    * signature, so the candidate stage shares the persisted
-    * [[signatureTable]] artifact with the ANN query path.
-    */
-  def cosineDupPairsBucketed(vectors: DataFrame, threshold: Double,
-      nTables: Int = 16, nBits: Int = 8, bucketBits: Int = 3,
-      maxBucketSize: Int = 4096,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    cosineDupPairsFromSignatures(
-      signatureTable(vectors, nTables, nBits, idCol, vecCol),
-      threshold, bucketBits, maxBucketSize)
-
-  /** [[cosineDupPairsBucketed]] over a precomputed [[signatureTable]] —
-    * the registered/production form: the signature table is built once per
-    * corpus and shared between near-dup detection and ANN probes.
-    *
-    * `maxBucketSize` mirrors [[Dedup.minhashLshPairs]]: a bucket holding a
-    * large fraction of the corpus (e.g. a spam cluster of identical
-    * embeddings) is not discriminating and would make the self-join
-    * quadratic; such buckets are dropped. `bucketBits` trades bucket size
-    * against recall — raise it as the corpus grows to keep buckets
-    * bounded (recall per pair at cosine c is 1−(1−p^b)^T with
-    * p = 1−arccos(c)/π).
-    */
-  /** Candidate + vector-attach stage of [[cosineDupPairsFromSignatures]]
-    * as a DataFrame — exposed so plan audits can inspect the join topology
-    * (the registered query's own physical plan shows only the
-    * ExternalRDDScan above the InternalRow scorer).
-    */
   /** Exploded (vec_id, bkey) table: one row per (vector, LSH table), key =
     * table id ∥ low `bucketBits` of the stored signature.
     */
@@ -181,6 +157,11 @@ object Ann {
           .bitwiseOR(col("col").bitwiseAND(lit(mask))).as("bkey"))
   }
 
+  /** Candidate + vector-attach stage of [[cosineDupPairsFromSignatures]]
+    * as a DataFrame — exposed so plan audits can inspect the join topology
+    * (the registered query's own physical plan shows only the
+    * ExternalRDDScan above the InternalRow scorer).
+    */
   def cosineDupPairsCandidates(sigTable: DataFrame,
       bucketBits: Int = 3, maxBucketSize: Int = 4096,
       broadcastVectors: Boolean = false): DataFrame = {
@@ -308,6 +289,25 @@ object Ann {
     scored.toDF("doc_a", "doc_b", "cosine").distinct()
   }
 
+  /** Corpus-scale embedding-cosine near-duplicate pairs over a
+    * precomputed [[signatureTable]]: sign-LSH bucket SELF-JOIN
+    * (candidates) → exact cosine on colliding pairs only (verify) — the
+    * same candidates→verify shape as [[Dedup.minhashLshPairs]] →
+    * [[Dedup.jaccardPairs]]. Nothing is collected to the driver: the plan
+    * is signature scan → capped equi-self-join on (table, bucket) →
+    * distinct pairs → two equi-joins to re-attach vectors → map-side
+    * scoring. Sub-banding uses the low `bucketBits` of each stored table
+    * signature, so near-dup detection shares the signature table with the
+    * ANN query path.
+    *
+    * `maxBucketSize` mirrors [[Dedup.minhashLshPairs]]: a bucket holding a
+    * large fraction of the corpus (e.g. a spam cluster of identical
+    * embeddings) is not discriminating and would make the self-join
+    * quadratic; such buckets are dropped. `bucketBits` trades bucket size
+    * against recall — raise it as the corpus grows to keep buckets
+    * bounded (recall per pair at cosine c is 1−(1−p^b)^T with
+    * p = 1−arccos(c)/π).
+    */
   def cosineDupPairsFromSignatures(sigTable: DataFrame, threshold: Double,
       bucketBits: Int = 3, maxBucketSize: Int = 4096,
       broadcastVectors: Boolean = false): DataFrame = {
@@ -376,22 +376,13 @@ object Ann {
     * (sign vectors inlined as literals, like the MinHash mixA/mixB
     * constants in [[Dedup]]) — which is what buys d10's bucketed plan a
     * hard replayed oracle. One family serves every sign-LSH consumer
-    * ([[signatureTable]], [[lshCosineTopK]], [[cosineDupPairsBucketed]])
-    * so the persisted signature table is a shared artifact.
-    */
-  private def splitmix64(seed: Long): Long = {
-    var z = seed + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
-  /** ±1 sign for (table, bit, dim) — independent of nBits/nTables so a
-    * signature's low bits are identical whether computed at nBits=8 or
-    * nBits=3 (prefix sub-banding relies on this).
+    * through [[signatureTable]], so the persisted table is a shared
+    * artifact. The sign for (table, bit, dim) is independent of
+    * nBits/nTables, so a signature's low bits are identical whether
+    * computed at nBits=8 or nBits=3 (prefix sub-banding relies on this).
     */
   def signAt(t: Int, h: Int, j: Int): Double =
-    if ((splitmix64(splitmix64(t.toLong * 131071L + h) + j) & 1L) == 1L) 1.0 else -1.0
+    if ((Dedup.splitmix64(Dedup.splitmix64(t.toLong * 131071L + h) + j) & 1L) == 1L) 1.0 else -1.0
 
   /** Cached dense sign matrix for (nTables, nBits, dims): row (t*nBits+h)
     * holds the ±1 projection vector — one multiply-add per dim in the hot
@@ -467,103 +458,18 @@ object Ann {
       .toDF("vec_id", "v", "norm", "sigs", "n_bits")
   }
 
-  /** LSH-bucketed ANN for a QUERY SET against a huge candidate corpus:
-    * the query side is indexed bucket→(id, vector, norm) and broadcast
-    * (the query set is small by contract — same contract as
-    * [[cosineTopK]]'s `broadcast(q)`); candidates stream MAP-ONLY through
-    * one scan that computes their signatures, probes the index, and scores
-    * only colliding pairs. The per-candidate probe dedups query hits
-    * locally, so pairs are globally unique without a dropDuplicates
-    * shuffle — the ONLY shuffle in the whole plan is the final per-query
-    * top-k (tiny: surviving pairs).
-    *
-    * This replaces a round-1 formulation whose bucket join exploded full
-    * vectors nTables× into a shuffle and computed signatures with
-    * interpreted Catalyst HOFs (~dims×nTables×nBits hash evaluations per
-    * row), costing more than the brute force it was meant to beat.
-    * Corpus×corpus near-dup search is a different operator — that is
-    * [[graft.spark.Dedup.minhashLshPairs]]-style bucketed self-join.
-    * Ids must be long-castable.
-    */
-  def lshCosineTopK(candidates: DataFrame, queries: DataFrame, k: Int,
-      nTables: Int = 8, nBits: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = candidates.sparkSession
-    import spark.implicits._
-
-    def dotJvm(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0
-      var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { s += a(i) * b(i); i += 1 }
-      s
-    }
-
-    val qRows = queries.select(Dedup.requireLongId(col(idCol), "lshCosineTopK"), asDouble(col(vecCol)))
-      .as[(Long, Seq[Double])].collect()
-    val qIndex = new java.util.HashMap[java.lang.Long, Array[(Long, Array[Double], Double)]]()
-    // zero-norm queries have no defined cosine against anything: leave
-    // them out of the index (they return no rows) instead of producing
-    // NaN scores downstream
-    qRows.withFilter { case (_, qv) => qv.exists(_ != 0.0) }.foreach { case (qid, qv) =>
-      val arr = qv.toArray
-      val nrm = math.sqrt(dotJvm(arr, arr))
-      val bits = signBitsJvm(arr, nTables, nBits)
-      var t = 0
-      while (t < nTables) {
-        val key = java.lang.Long.valueOf(bucketKey(t, bits(t), nBits))
-        val prev = qIndex.get(key)
-        val entry = (qid, arr, nrm)
-        qIndex.put(key, if (prev == null) Array(entry) else prev :+ entry)
-        t += 1
-      }
-    }
-    val bc = SessionArtifacts.broadcast(spark, qIndex)
-
-    val scored = candidates
-      .select(Dedup.requireLongId(col(idCol), "lshCosineTopK"), asDouble(col(vecCol)))
-      .as[(Long, Seq[Double])]
-      .mapPartitions { it =>
-        val idx = bc.value
-        it.flatMap { case (vid, vseq) =>
-          val v = vseq.toArray
-          val vn = math.sqrt(dotJvm(v, v))
-          val seen = new java.util.HashSet[Long]()
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-          val buckets = signBitsJvm(v, nTables, nBits)
-          var bi = 0
-          // vn == 0 → no defined cosine: emit nothing for this candidate
-          while (vn > 0.0 && bi < buckets.length) {
-            val hits = idx.get(java.lang.Long.valueOf(bucketKey(bi, buckets(bi), nBits)))
-            if (hits != null) {
-              var qi = 0
-              while (qi < hits.length) {
-                val (qid, qv, qn) = hits(qi)
-                if (qid != vid && seen.add(qid)) {
-                  // mirror Column round(x, 3): HALF_UP on shortest decimal
-                  val c = java.math.BigDecimal.valueOf(dotJvm(qv, v) / (qn * vn))
-                    .setScale(3, java.math.RoundingMode.HALF_UP).doubleValue()
-                  out += ((qid, vid, c))
-                }
-                qi += 1
-              }
-            }
-            bi += 1
-          }
-          out.iterator
-        }
-      }
-      .toDF("query_id", "vec_id", "cosine")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rk", row_number().over(w).cast("long")).filter(col("rk") <= k)
-  }
-
-  /** [[lshCosineTopK]] over a PRECOMPUTED [[signatureTable]]: the scan
-    * reads stored signatures instead of recomputing them, so a query
-    * batch pays only index-probe + colliding-pair scoring. This is the
-    * regime where sign-LSH beats brute force even for small query sets —
-    * see the crossover note on [[signatureTable]].
+  /** LSH-bucketed ANN for a QUERY SET against a PRECOMPUTED
+    * [[signatureTable]]: the query side is indexed bucket→(id, vector,
+    * norm) and broadcast (the query set is small by contract — same
+    * contract as [[cosineTopK]]'s `broadcast(q)`); the candidate scan
+    * stays MAP-ONLY, reads stored signatures instead of recomputing them,
+    * probes the index and scores only colliding pairs. The per-candidate
+    * probe dedups query hits locally, so pairs are globally unique without
+    * a dropDuplicates shuffle — the ONLY shuffle is the final per-query
+    * top-k. A query batch pays only index-probe + colliding-pair scoring,
+    * the regime where sign-LSH beats brute force even for small query
+    * sets (see the crossover note on [[signatureTable]]). Ids must be
+    * long-castable.
     *
     * `probeHamming` enables MULTI-PROBE: the query side also registers
     * every bucket within Hamming distance ≤ probeHamming of its own
@@ -578,13 +484,6 @@ object Ann {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = sigTable.sparkSession
     import spark.implicits._
-    def dotJvm(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0
-      var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { s += a(i) * b(i); i += 1 }
-      s
-    }
     val qRows = queries.select(Dedup.requireLongId(col(idCol), "lshCosineTopKPrecomputed"),
         asDouble(col(vecCol)))
       .as[(Long, Seq[Double])].collect()
@@ -629,7 +528,6 @@ object Ann {
     // for EVERY scanned row, but most corpus rows hit no query bucket —
     // here a miss reads only the 8-byte signatures, and the vector is
     // materialized from the InternalRow only on the first bucket hit.
-    import spark.implicits._
     val df = sigTable.select(col("vec_id"), col("v"), col("norm"), col("sigs"), col("n_bits"))
     val rdd = df.queryExecution.toRdd.mapPartitions { it =>
       val idx = bc.value

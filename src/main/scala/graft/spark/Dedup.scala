@@ -71,7 +71,7 @@ object Dedup {
     */
   final val MixMod = 2305843009213693951L // 2^61 − 1 (prime)
   private final val Mask57 = (1L << 57) - 1
-  private def splitmix64(seed: Long): Long = {
+  private[spark] def splitmix64(seed: Long): Long = {
     var z = seed + 0x9E3779B97F4A7C15L
     z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
     z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
@@ -355,95 +355,13 @@ object Dedup {
     scored.toDF("doc_a", "doc_b", "jaccard").filter(col("jaccard") >= threshold)
   }
 
-  /** All-pairs variant for BOUNDED candidate sets only (tests, small
-    * tables): generates the id cross product, then delegates to the
-    * equi-join path. Never call on an unbounded table.
-    */
-  def jaccardAllPairs(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", shingleK: Int = 5,
-      threshold: Double = 0.0): DataFrame = {
-    val ids = docs.select(col(idCol).as("id"))
-    val pairs = ids.select(col("id").as("doc_a"))
-      .crossJoin(ids.select(col("id").as("doc_b")))
-      .filter(col("doc_a") < col("doc_b"))
-    jaccardPairs(docs, pairs, idCol, textCol, shingleK, threshold)
-  }
-
-  /** SimHash (64-bit) over whitespace tokens: per-token xxhash64, bitwise
-    * majority vote across tokens — expressed with codegen'd bit ops via
-    * aggregate over the 64 positions.
-    */
-  def simhash(text: Column): Column = {
-    val tokens = filter(split(regexp_replace(lower(text), WsPattern, " "), " "), t => t =!= "")
-    val hashes = transform(tokens, t => xxhash64(t))
-    // for each bit mask: count tokens with the bit set; set the result bit
-    // when the majority has it
-    val masks = array((0 until 64).map(b => lit(1L << b)): _*)
-    val n = size(hashes)
-    aggregate(
-      masks,
-      lit(0L),
-      (acc, mask) => {
-        val cnt = aggregate(hashes, lit(0),
-          (c, h) => c + when(h.bitwiseAND(mask) =!= 0L, 1).otherwise(0))
-        acc.bitwiseOR(when(cnt * 2 >= n, mask).otherwise(lit(0L)))
-      })
-  }
-
-  /** JVM-side SimHash of one text — bit-for-bit identical to [[simhash]]
-    * (same Spark xxhash64 family via catalyst XXH64, same tokenization,
-    * same majority rule) but a single tight pass per row instead of 64
-    * interpreted Catalyst HOF traversals of the token-hash array.
-    */
-  def simhashJvm(text: String): Long = {
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    import org.apache.spark.unsafe.types.UTF8String
-    val toks = normalizeJvm(text).split(" ")
-    val counts = new Array[Int](64)
-    var n = 0
-    var i = 0
-    while (i < toks.length) {
-      if (toks(i).nonEmpty) {
-        n += 1
-        val u = UTF8String.fromString(toks(i))
-        val h = XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) counts(b) += 1
-          b += 1
-        }
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) {
-      if (counts(b) * 2 >= n) out |= (1L << b)
-      b += 1
-    }
-    out
-  }
-
-  /** SimHash fingerprints for a whole table, typed-layer hot path. */
-  def simhashDf(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(requireLongId(col(idCol), "simhashDf").as("id"), col(textCol).as("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        (id, simhashJvm(Option(text).getOrElse("")))
-      })
-      .toDF(idCol, "simhash")
-  }
-
   /** PORTABLE SimHash (60-bit, md5-derived token family): per-token hash is
     * the first 15 hex chars of md5(token) as a 60-bit int (the same base
     * hash as [[shingleX]]), majority vote per bit across token OCCURRENCES.
     * Same trick that bought d6/d7 their hard oracles: the md5 family
     * replays exactly in DuckDB
     * (`('0x'||substring(md5(t),1,15))::BIGINT`, integer shifts), unlike
-    * the Spark-specific xxhash64 family of [[simhash]]. A doc with zero
+    * Spark's engine-specific `xxhash64`. A doc with zero
     * tokens has every majority vote trivially satisfied (0·2 ≥ 0) →
     * fingerprint = 2^60−1, mirrored by the oracle's COALESCE.
     */
@@ -520,10 +438,6 @@ object Dedup {
       })
       .toDF(idCol, "simhash")
   }
-
-  /** Hamming distance between two 64-bit simhashes. */
-  def hamming(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
 
   /** SimHash near-duplicate PAIRS via banded Hamming search (the
     * Manku/Jain/Das Sarma web-dedup construction, WWW'07 — public

@@ -41,6 +41,7 @@ import org.apache.spark.sql.functions._
   * oracle here has, see the `dims` literal in the generated sign-LSH SQL).
   */
 object Ivf {
+  import Ann.dotJvm
 
   /** Quantization scale for the k-means update step (6 decimal digits —
     * matches the 6-decimal cosine rounding used for ranking).
@@ -50,14 +51,6 @@ object Ivf {
   /** Round to `scale` decimals, HALF_UP — mirrors Column/DuckDB round. */
   @inline private def rnd(x: Double, scale: Int): Double =
     java.math.BigDecimal.valueOf(x).setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  private def dotJvm(a: Array[Double], b: Array[Double]): Double = {
-    var s = 0.0
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { s += a(i) * b(i); i += 1 }
-    s
-  }
 
   /** One centroid: `listId` is the 0-based list identifier (seed-hash
     * order), `cv` the centroid vector, `cn` its L2 norm.

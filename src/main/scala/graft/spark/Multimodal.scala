@@ -37,19 +37,6 @@ final case class MediaFeatures(
   */
 object Multimodal {
 
-  /** Build the media side-table from extracted docs: one row per media
-    * span, with a deterministic synthetic payload (the generated corpus
-    * has no real bytes; payload = seeded bytes from the ref hash).
-    */
-  def mediaTable(extracted: Dataset[ExtractedDoc])(implicit spark: SparkSession): Dataset[MediaObject] = {
-    import spark.implicits._
-    extracted.flatMap { d =>
-      d.spans.filter(_.kind != "text").map { s =>
-        MediaObject(d.doc_id, s.media_ref, s.kind, syntheticPayload(s.media_ref))
-      }
-    }
-  }
-
   /** Deterministic ORACLE-REPLAYABLE media side-table derived from a plain
     * document table: each doc gets 0–3 media objects with ASCII payloads
     * built from md5 hex chains, so DuckDB can reproduce byte counts and
@@ -62,7 +49,7 @@ object Multimodal {
     *   kind_i = ["image","audio","video"][(x + i) % 3]
     *   payload_i = md5(ref_i) repeated (1 + (md5_60(ref_i) % 31)) times
     */
-  def syntheticMediaFromDocs(docs: org.apache.spark.sql.DataFrame,
+  def syntheticMediaFromDocs(docs: DataFrame,
       idCol: String = "doc_id")(implicit spark: SparkSession): Dataset[MediaObject] = {
     import spark.implicits._
     // the md5-chain payload synthesis is CPU-bound: spread a single-row-
@@ -89,21 +76,6 @@ object Multimodal {
           payload.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
       }
     }
-  }
-
-  /** Deterministic fake payload (stands in for fetched bytes). */
-  def syntheticPayload(mediaRef: String): Array[Byte] = {
-    val seed = mediaRef.hashCode.toLong & 0xffffffffL
-    val n = 256 + (seed % 768).toInt
-    val out = new Array[Byte](n)
-    var x = seed | 1
-    var i = 0
-    while (i < n) {
-      x = x * 6364136223846793005L + 1442695040888963407L
-      out(i) = (x >>> 32).toByte
-      i += 1
-    }
-    out
   }
 
   /** ??? in spirit: the real implementation would decode the payload with
@@ -141,12 +113,4 @@ object Multimodal {
       }
     }
   }
-
-  /** Exact media dedup across docs by payload hash. */
-  def dedupByContent(features: Dataset[MediaFeatures]): DataFrame =
-    features.groupBy(col("content_hash"))
-      .agg(
-        count(lit(1)).as("n_copies"),
-        min(col("media_ref")).as("canonical_ref"))
-      .filter(col("n_copies") > 1)
 }
