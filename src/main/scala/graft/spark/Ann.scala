@@ -21,7 +21,8 @@ object Ann {
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
   /** Typed-layer dot product over the common prefix, summed in ascending
-    * index order; shared by the sign-LSH probe and [[Ivf]].
+    * index order; every JVM-side dot product and norm in this file and in
+    * [[Ivf]] goes through it.
     */
   private[spark] def dotJvm(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0
@@ -110,30 +111,20 @@ object Ann {
       .as[(Long, Seq[Double])]
     val all = rows.collect().sortBy(_._1).map { case (id, v) =>
       val a = v.toArray
-      var s = 0.0
-      var i = 0
-      while (i < a.length) { s += a(i) * a(i); i += 1 }
-      (id, a, math.sqrt(s))
+      (id, a, math.sqrt(dotJvm(a, a)))
     }
     val bc = SessionArtifacts.broadcast(spark, all)
     val out = rows.mapPartitions { it =>
       val mat = bc.value
       it.flatMap { case (id, vseq) =>
         val v = vseq.toArray
-        var nv = 0.0
-        var i = 0
-        while (i < v.length) { nv += v(i) * v(i); i += 1 }
-        val vn = math.sqrt(nv)
+        val vn = math.sqrt(dotJvm(v, v))
         val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
         var j = 0
         while (j < mat.length && vn > 0.0) {
           val (oid, ov, on) = mat(j)
           if (oid > id && on > 0.0) {
-            var d = 0.0
-            var k = 0
-            val n = math.min(v.length, ov.length)
-            while (k < n) { d += v(k) * ov(k); k += 1 }
-            val c = java.math.BigDecimal.valueOf(d / (vn * on))
+            val c = java.math.BigDecimal.valueOf(dotJvm(v, ov) / (vn * on))
               .setScale(3, java.math.RoundingMode.HALF_UP).doubleValue()
             if (c >= threshold) buf += ((id, oid, c))
           }
@@ -262,12 +253,7 @@ object Ann {
                 // zero-norm embeddings have no defined cosine — skip,
                 // matching the join-path scorer and the oracle's NULL filter
                 if (vb != null && vb._2 > 0.0) {
-                  val x = va._1; val y = vb._1
-                  var d = 0.0
-                  var k = 0
-                  val n = math.min(x.length, y.length)
-                  while (k < n) { d += x(k) * y(k); k += 1 }
-                  val raw = d / (va._2 * vb._2)
+                  val raw = dotJvm(va._1, vb._1) / (va._2 * vb._2)
                   if (raw >= margin) {
                     // mirror Column/DuckDB round(x, 3): HALF_UP, shortest decimal
                     val c = java.math.BigDecimal.valueOf(raw)
@@ -340,12 +326,8 @@ object Ann {
         // throw and fail the whole job.
         if (na == 0.0 || nb == 0.0) Iterator.empty
         else {
-        var d = 0.0
-        var i = 0
-        val n = math.min(x.length, y.length)
-        while (i < n) { d += x(i) * y(i); i += 1 }
         // mirror Column/DuckDB round(x, 3): HALF_UP on shortest decimal
-        val c = java.math.BigDecimal.valueOf(d / (na * nb))
+        val c = java.math.BigDecimal.valueOf(dotJvm(x, y) / (na * nb))
           .setScale(3, java.math.RoundingMode.HALF_UP).doubleValue()
         if (c >= threshold) Iterator.single((a, b, c)) else Iterator.empty
         }
@@ -450,10 +432,7 @@ object Ann {
       .as[(Long, Seq[Double])]
       .mapPartitions(_.map { case (vid, vseq) =>
         val v = vseq.toArray
-        var s = 0.0
-        var i = 0
-        while (i < v.length) { s += v(i) * v(i); i += 1 }
-        (vid, vseq, math.sqrt(s), signBitsJvm(v, nTables, nBits).toSeq, nBits)
+        (vid, vseq, math.sqrt(dotJvm(v, v)), signBitsJvm(v, nTables, nBits).toSeq, nBits)
       })
       .toDF("vec_id", "v", "norm", "sigs", "n_bits")
   }

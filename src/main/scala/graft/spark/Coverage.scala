@@ -63,10 +63,20 @@ object Coverage {
       if (schema.fieldNames.contains("status") && !row.isNullAt(schema.fieldIndex("status")))
         row.getString(schema.fieldIndex("status"))
       else "ok"
-    entries(report.sparkSession).add(CoverageEntry(query, kind, status,
-      new java.sql.Timestamp(System.currentTimeMillis()), metrics))
+    add(report.sparkSession, query, kind, status, metrics)
     row
   }
+
+  /** Record a report the caller already holds as numbers (status "ok"),
+    * without planning a query.
+    */
+  def record(spark: SparkSession, query: String, kind: String, metrics: Map[String, Double]): Unit =
+    add(spark, query, kind, "ok", metrics)
+
+  private def add(spark: SparkSession, query: String, kind: String, status: String,
+      metrics: Map[String, Double]): Unit =
+    entries(spark).add(CoverageEntry(query, kind, status,
+      new java.sql.Timestamp(System.currentTimeMillis()), metrics))
 
   /** Everything `spark`'s application recorded since its last release, as
     * a queryable DataFrame — FLATTENED to one (query, kind, status,

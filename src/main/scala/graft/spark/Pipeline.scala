@@ -1,13 +1,16 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed extraction skeleton (SURVEY.md §2.0):
   *
   * {{{
   * scan → mapPartitions(per-doc kernel + oversize gate) → sink
-  *                                                      ↘ lineage sidecar (from the committed sink)
+  *                                                      ↘ lineage sidecar (from committed output)
   * }}}
   *
   * One extraction path: the map runs aligned with the scan's partitions
@@ -26,7 +29,13 @@ import org.apache.spark.sql.functions._
   *   - per-document failures become status/error columns, never task
   *     failures.
   *   - lineage rows keyed by [[Lineage.partKey]] make restarts resumable
-  *     (see [[Lineage.resumeFilter]]).
+  *     (see [[Lineage.resumeFilter]]). A restart reads the ≤ nParts-row
+  *     sidecar, not the sink: its done-set costs one sidecar collect and
+  *     a footer count ([[TableIO.countRows]]), and its commit aggregates
+  *     only the files it appended and merges them into the sidecar
+  *     ([[Lineage.mergeAppended]]). The whole sink is re-aggregated only
+  *     on a fresh run, on the catalog path, and to heal a stale or
+  *     missing sidecar.
   */
 object Pipeline {
 
@@ -191,15 +200,16 @@ object Pipeline {
 
   /** Single-pass extraction with durable lineage (S3/S4): extract → write
     * the sink ONCE (tagged with the deterministic resume [[Lineage.partKey]])
-    * → derive lineage by aggregating the COMMITTED output table.
+    * → derive lineage from COMMITTED output: on a fresh run by aggregating
+    * the committed table, on a resumed run by aggregating the files the
+    * append committed and merging them into the prior sidecar (falling
+    * back to the full aggregate when the merge does not validate — see
+    * [[TableIO.commitWithSidecar]]). The corpus-sized dataset is never
+    * cached or recomputed. Deriving lineage from committed files makes it
+    * exactly-once under task retries: a re-run task's uncommitted output
+    * is never counted.
     *
-    * Scale rationale (replaces the round-1 `.cache()` two-pass design):
-    * the corpus-sized dataset is never cached or recomputed — the only
-    * extra cost is one scan of the (much smaller) output table. Deriving
-    * lineage from committed files also makes it exactly-once under task
-    * retries: a re-run task's uncommitted output is never counted.
-    */
-  /** RESUME CONTRACT (enforced by construction, see [[Lineage]]):
+    * RESUME CONTRACT (enforced by construction, see [[Lineage]]):
     *   - a run must cover WHOLE part_key buckets — `Lineage.fromOutput`
     *     marks a bucket done when any committed row carries it, so feeding
     *     a corpus subset that splits buckets would mark unprocessed docs
@@ -211,6 +221,9 @@ object Pipeline {
     * All sink I/O goes through the [[TableIO]] seam — on Iceberg the
     * append is an atomic snapshot commit, which is what makes
     * lineage-from-committed-output exactly-once under task retry.
+    *
+    * The oversize-gate stats of the run land as a [[Coverage]] row
+    * (`extract`, `oversize_gate`), which Submit persists in `_coverage`.
     */
   def extractToSink(docs: Dataset[Doc], runId: String, outPath: String,
       cfg: Config = Config(), nParts: Int = Lineage.defaultParts,
@@ -222,18 +235,20 @@ object Pipeline {
     // sink + lineage sidecar go through the TableIO commit seam as one
     // logical commit: the sidecar (≤ nParts rows — O(nParts) restart via
     // [[Lineage.doneSet]] instead of re-scanning a tens-of-TB output)
-    // derives from the COMMITTED table and is always a full overwrite, so
-    // a resumed run's sidecar covers the union of every run so far. The
+    // derives from COMMITTED output and is always a full overwrite, so a
+    // resumed run's sidecar covers the union of every run so far. The
     // crash window between the two writes is part of the documented
     // contract — see [[TableIO.commitWithSidecar]].
     val written = io.commitWithSidecar(out, outPath,
       committed => Lineage.fromOutput(committed, runId).toDF(),
+      appended => Lineage.mergeAppended(io, outPath, appended, runId),
       "lineage", resume)
     // the sink write is the action that ran the plan → gate stats are live
-    println(s"[extract] run=$runId oversize_docs=${stats.nOversize.value} " +
-      s"gate_wait_ms=${stats.gateWaitMs.value}")
+    Coverage.record(spark, "extract", "oversize_gate", Map(
+      "oversize_docs" -> stats.nOversize.value.doubleValue,
+      "gate_wait_ms" -> stats.gateWaitMs.value.doubleValue))
     val extracted = written.drop("part_key").as[ExtractedDoc]
-    (extracted, io.read(spark, io.sidecar(outPath, "lineage")).as[LineageRow])
+    (extracted, io.read(spark, io.sidecar(outPath, "lineage"), Lineage.schema).as[LineageRow])
   }
 
   /** Extraction quality metrics: one row per status with counts and text
@@ -277,8 +292,12 @@ object Lineage {
   def partKey(docId: Column, nParts: Int): Column =
     pmod(xxhash64(docId), lit(nParts.toLong))
 
-  /** Lineage rows aggregated from the COMMITTED output table (one cheap
-    * scan of the output, AQE-coalesced; exactly-once under task retry).
+  /** The sidecar's schema: it is read back under it, never inferred. */
+  val schema: StructType = Encoders.product[LineageRow].schema
+
+  /** Lineage rows aggregated from COMMITTED output rows (the whole table,
+    * or the files one append committed; AQE-coalesced; exactly-once under
+    * task retry).
     */
   def fromOutput(written: DataFrame, runId: String)(
       implicit spark: SparkSession): Dataset[LineageRow] = {
@@ -294,15 +313,53 @@ object Lineage {
       .as[LineageRow]
   }
 
+  /** The sidecar after a resumed append, without re-aggregating the
+    * sink: the prior sidecar (≤ nParts rows, one per part_key — the bound
+    * on what is collected) merged with [[fromOutput]] over only the
+    * `appended` rows, every row stamped with `runId`. Counts and sums add; max_doc_id
+    * takes the larger in Spark's UTF-8 binary order (Java's UTF-16
+    * `compareTo` disagrees on supplementary-plane chars), nulls ignored —
+    * so the rows equal a full [[fromOutput]] re-derive. None (→ the full
+    * re-derive) when the prior sidecar is missing or unreadable, or when
+    * the merged n_docs do not sum to the sink's footer count: a sidecar
+    * left stale by a crash after an earlier sink commit fails that check.
+    */
+  private[spark] def mergeAppended(io: TableIO, table: String, appended: DataFrame,
+      runId: String)(implicit spark: SparkSession): Option[DataFrame] = {
+    import spark.implicits._
+    // one collect: the prior sidecar's rows and the appended rows' aggregate
+    scala.util.Try(
+      io.read(spark, io.sidecar(table, "lineage"), schema).as[LineageRow]
+        .union(fromOutput(appended, runId)).collect()
+    ).toOption.flatMap { rows =>
+      val merged = rows.toSeq.groupMapReduce(_.part_key)(_.copy(run_id = runId)) { (a, b) =>
+        LineageRow(runId, a.part_key, a.n_docs + b.n_docs, a.n_errors + b.n_errors,
+          a.sum_text_length + b.sum_text_length, maxDocId(a.max_doc_id, b.max_doc_id))
+      }.values.toSeq.sortBy(_.part_key)
+      if (merged.iterator.map(_.n_docs).sum != io.countRows(spark, table)) None
+      else Some(merged.toDS().toDF().coalesce(1))
+    }
+  }
+
+  /** `max` over two doc ids as Spark computes it: UTF-8 binary order,
+    * null only when both are.
+    */
+  private[spark] def maxDocId(a: String, b: String): String =
+    if (a == null) b
+    else if (b == null) a
+    else if (UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) >= 0) a
+    else b
+
   /** Done-set for a restart: the part_keys committed by previous runs.
     *
     * Prefers the persisted lineage SIDECAR (≤ nParts rows — restart cost
-    * O(nParts) instead of a scan of the tens-of-TB output table), but the
-    * sidecar is a CACHE of the committed output, written non-atomically
-    * after the sink commit: a crash in that window leaves it stale, and a
-    * resume trusting a stale sidecar would re-extract already-committed
-    * buckets and APPEND duplicates. So the sidecar is validated first with
-    * a metadata-only probe — its sum(n_docs) must equal the sink's row
+    * O(nParts): one collect of its (part_key, n_docs) and a footer count,
+    * instead of a scan of the tens-of-TB output table), but the sidecar
+    * is a CACHE of the committed output, written non-atomically after the
+    * sink commit: a crash in that window leaves it stale, and a resume
+    * trusting a stale sidecar would re-extract already-committed buckets
+    * and APPEND duplicates. So the sidecar is validated first with a
+    * metadata-only probe — its sum(n_docs) must equal the sink's row
     * count ([[TableIO.countRows]]: parquet footers / Iceberg snapshot
     * summary, no data scan) — and on any mismatch (or no sidecar: older
     * sinks) the done-set falls back to the always-consistent output scan.
@@ -313,19 +370,22 @@ object Lineage {
     // written non-atomically after the sink commit, so the crash window can
     // leave not just a STALE sidecar (caught by the count compare) but a
     // physically CORRUPT one — readable footers, bad data pages — where the
-    // validation aggregate itself throws at execution time. Any failure
+    // validation collect itself throws at execution time. Any failure
     // anywhere in the sidecar path must degrade to the always-consistent
     // committed-output scan, never abort the resume.
     val validated = scala.util.Try {
       val sc = io.read(spark, io.sidecar(outPath, "lineage"))
       if (!(sc.columns.contains("part_key") && sc.columns.contains("n_docs"))) None
       else {
-        val total = sc.agg(sum(col("n_docs"))).collect()(0)
-        val sidecarDocs = if (total.isNullAt(0)) 0L else total.getLong(0)
-        if (io.countRows(spark, outPath) == sidecarDocs) Some(sc) else None
+        // ≤ nParts rows: one collect serves the count check and the keys
+        val rows = sc.select(col("part_key").cast("long"), col("n_docs").cast("long")).collect()
+        val sidecarDocs = rows.iterator.map(r => if (r.isNullAt(1)) 0L else r.getLong(1)).sum
+        if (io.countRows(spark, outPath) != sidecarDocs) None
+        else Some(spark.createDataset(rows.toSeq.map(_.getAs[java.lang.Long](0)))(Encoders.LONG)
+          .toDF("part_key"))
       }
     }.toOption.flatten
-    validated.map(_.select(col("part_key")))
+    validated
       .orElse(
         scala.util.Try(io.read(spark, outPath)).toOption
           .filter(_.columns.contains("part_key"))
@@ -337,10 +397,15 @@ object Lineage {
     * The done-key set is collected once (bounded by nParts, see class doc)
     * and pushed into a codegen'd `InSet` predicate — the resumed scan stays
     * MAP-ONLY: no shuffle of the corpus, no join, no BroadcastExchange.
+    * A done-set that is a local relation ([[doneSet]]'s validated
+    * sidecar keys) is collected and deduplicated without a job.
     */
   def resumeFilter(docs: DataFrame, doneLineage: DataFrame, nParts: Int = defaultParts): DataFrame = {
-    val doneKeys: Seq[Long] = doneLineage.select(col("part_key").cast("long"))
-      .distinct().collect().map(_.getLong(0)).toSeq
+    val keys = doneLineage.select(col("part_key").cast("long"))
+    val rows =
+      if (keys.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) keys.collect()
+      else keys.distinct().collect()
+    val doneKeys: Seq[Long] = rows.iterator.map(_.getLong(0)).distinct.toSeq
     if (doneKeys.isEmpty) docs
     else docs.filter(!partKey(col("doc_id"), nParts).isInCollection(doneKeys))
   }

@@ -1,6 +1,7 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Format-agnostic table I/O (SURVEY.md §7.1): every scan and sink in the
   * engine goes through this seam so the storage layer is a deployment
@@ -19,12 +20,30 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   */
 trait TableIO {
   def read(spark: SparkSession, table: String): DataFrame
+  /** [[read]] under a schema the caller already knows — a table the
+    * program itself wrote — so the format infers none (on parquet: no
+    * footer-reading job). Catalog tables carry their schema, so the
+    * default ignores it.
+    */
+  def read(spark: SparkSession, table: String, schema: StructType): DataFrame =
+    read(spark, table)
   /** Replace the table's contents (fresh-run sink). */
   def write(df: DataFrame, table: String): Unit
   /** Append to the table (resumed-run sink: the committed output of the
     * prior run must survive — see [[Pipeline.extractToSink]]).
     */
   def append(df: DataFrame, table: String): Unit
+  /** [[append]], then the rows of exactly what it committed, read under
+    * `df`'s schema: what a commit added, so a derived sidecar can be
+    * merged instead of re-derived from the whole table
+    * ([[commitWithSidecar]]). None when the format cannot name them —
+    * the default, and the catalog path (Iceberg's form is the snapshot
+    * diff, which needs its runtime).
+    */
+  def appendCommitted(df: DataFrame, table: String): Option[DataFrame] = {
+    append(df, table)
+    None
+  }
   /** Name of a small sidecar table stored logically beside `table` (the
     * persisted lineage, [[Pipeline.extractToSink]]). Catalog identifiers
     * get a `_suffix` sibling table; the parquet implementation nests an
@@ -33,39 +52,56 @@ trait TableIO {
     */
   def sidecar(table: String, suffix: String): String = table + "_" + suffix
   /** Row count WITHOUT a data scan — the consistency probe for
-    * sidecar-vs-sink validation ([[Lineage.doneSet]]). On parquet a
-    * count(*) is answered from row-group footers (no column data read);
-    * on Iceberg it is O(1) from the snapshot summary's total-records.
+    * sidecar-vs-sink validation ([[Lineage.doneSet]], the resumed
+    * commit's merge check). On parquet the row-group footers answer it
+    * (no column data read); on Iceberg it is O(1) from the snapshot
+    * summary's total-records.
     */
   def countRows(spark: SparkSession, table: String): Long =
     read(spark, table).count()
 
   /** Commit `main` plus its derived sidecar as ONE LOGICAL COMMIT from
-    * the resume contract's point of view. `sidecarOf` receives the
-    * COMMITTED table (sidecar content derives from committed state only —
-    * the exactly-once-under-retry property). Returns the committed table.
+    * the resume contract's point of view. The sidecar content derives
+    * from committed state only (the exactly-once-under-retry property).
+    * Returns the committed table, read back under `main`'s schema.
+    *
+    * A fresh run (`resume = false`) replaces the table and derives the
+    * sidecar with `sidecarOf` over the whole committed table. A resumed
+    * run appends; when the format names the files the append committed
+    * ([[appendCommitted]]), `mergeAppended` receives their rows and
+    * returns the merged sidecar (O(appended output + sidecar), see
+    * [[Lineage.mergeAppended]]), or None when it cannot vouch for the
+    * merge — then, and on formats that name nothing, `sidecarOf` runs
+    * over the whole committed table: the one fallback, and the path that
+    * heals a stale sidecar.
     *
     * Default implementation: sink first, then sidecar overwrite. A crash
     * between the two leaves a STALE sidecar — that window is part of the
     * contract, defended downstream: [[Lineage.doneSet]] validates the
     * sidecar against the sink's metadata row count and falls back to the
-    * committed-output scan on any mismatch (crash-window contract-tested
-    * for both the parquet and catalog implementations in PipelineSpec).
-    * The sink-THEN-sidecar order is load-bearing: the reverse order could
-    * leave a sidecar claiming buckets the sink never committed, which the
-    * count probe would also catch — but only by discarding resume
-    * savings on every crash instead of only sidecar-window crashes.
-    * A catalog backend with real multi-table transactions (e.g. an
-    * Iceberg REST catalog) overrides this to commit both tables in one
-    * transaction; the stock Spark API exposes no such commit, so the
-    * default encodes ordering + validation rather than pretending
-    * atomicity it cannot have.
+    * committed-output scan on any mismatch, and the next resumed commit's
+    * merge fails the same count check and re-derives (crash-window
+    * contract-tested for both the parquet and catalog implementations in
+    * PipelineSpec). The sink-THEN-sidecar order is load-bearing: the
+    * reverse order could leave a sidecar claiming buckets the sink never
+    * committed, which the count probe would also catch — but only by
+    * discarding resume savings on every crash instead of only
+    * sidecar-window crashes. A catalog backend with real multi-table
+    * transactions (e.g. an Iceberg REST catalog) overrides this to commit
+    * both tables in one transaction; the stock Spark API exposes no such
+    * commit, so the default encodes ordering + validation rather than
+    * pretending atomicity it cannot have.
     */
   def commitWithSidecar(main: DataFrame, table: String,
-      sidecarOf: DataFrame => DataFrame, suffix: String, resume: Boolean): DataFrame = {
-    if (resume) append(main, table) else write(main, table)
-    val written = read(main.sparkSession, table)
-    write(sidecarOf(written), sidecar(table, suffix))
+      sidecarOf: DataFrame => DataFrame, mergeAppended: DataFrame => Option[DataFrame],
+      suffix: String, resume: Boolean): DataFrame = {
+    val spark = main.sparkSession
+    val appended =
+      if (resume) appendCommitted(main, table)
+      else { write(main, table); None }
+    // the merge path writes the sidecar without touching the sink's data
+    lazy val written = read(spark, table, main.schema)
+    write(appended.flatMap(mergeAppended).getOrElse(sidecarOf(written)), sidecar(table, suffix))
     written
   }
 
@@ -116,11 +152,84 @@ final class ParquetTableIO(root: String = "") extends TableIO {
   override def read(spark: SparkSession, table: String): DataFrame =
     spark.read.parquet(path(table))
 
+  override def read(spark: SparkSession, table: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path(table))
+
   override def write(df: DataFrame, table: String): Unit =
     df.write.mode("overwrite").parquet(path(table))
 
   override def append(df: DataFrame, table: String): Unit =
     df.write.mode("append").parquet(path(table))
+
+  /** The data files the append added: the table's file listing before
+    * and after it, read under `df`'s schema — listing only, no job.
+    */
+  override def appendCommitted(df: DataFrame, table: String): Option[DataFrame] = {
+    val spark = df.sparkSession
+    def files: Set[String] = {
+      val p = new org.apache.hadoop.fs.Path(path(table))
+      if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) Set.empty
+      else dataFiles(spark, table).map(_._1).toSet
+    }
+    val before = files
+    append(df, table)
+    val added = (files -- before).toSeq.sorted
+    Some(
+      if (added.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), df.schema)
+      else spark.read.schema(df.schema).parquet(added: _*))
+  }
+
+  /** The files a scan of `table` reads, as (path, length, modification
+    * time): Spark's own listing, which skips `_`/`.`-prefixed entries such
+    * as the nested sidecars. Listing only, no job; fails like [[read]] on
+    * a missing table.
+    */
+  private def dataFiles(spark: SparkSession, table: String): Seq[(String, Long, Long)] = {
+    import org.apache.spark.sql.execution.datasources._
+    read(spark, table, new StructType()).queryExecution.analyzed.collect {
+      case r: LogicalRelation => r.relation
+    }.flatMap {
+      case h: HadoopFsRelation => h.location match {
+        case index: PartitioningAwareFileIndex => index.allFiles()
+        case other => sys.error(s"unexpected file index ${other.getClass} for $table")
+      }
+      case other => sys.error(s"unexpected relation ${other.getClass} for $table")
+    }.map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+  }
+
+  /** The sum of the data files' footer row counts: no column is read and
+    * no schema inferred. A parquet file is immutable, so the application
+    * keeps each file's count under its (path, length, modification time),
+    * and a count reads only the footers of files committed since the last
+    * one, in one Spark job. A restart's count after its append thus reads
+    * the footers of what it appended, not of the whole sink.
+    */
+  override def countRows(spark: SparkSession, table: String): Long = {
+    import scala.jdk.CollectionConverters._
+    val files = dataFiles(spark, table).filter(_._2 > 0) // Spark's scan skips empty files too
+    val known = SessionArtifacts.memo("parquet row counts", spark, path(table))(
+      new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), java.lang.Long]())
+    val cached = files.flatMap(f => Option(known.get(f)).map(n => f -> n.longValue)).toMap
+    val unknown = files.filterNot(cached.contains)
+    val counted = if (unknown.isEmpty) Map.empty[(String, Long, Long), Long] else footerCounts(spark, unknown)
+    counted.foreach { case (f, n) => known.put(f, n) }
+    known.keySet.retainAll(files.toSet.asJava) // only the table's current files
+    files.iterator.map(f => cached.getOrElse(f, counted(f))).sum
+  }
+
+  /** Row counts from the footers of `files`, read in one Spark job. */
+  private def footerCounts(spark: SparkSession,
+      files: Seq[(String, Long, Long)]): Map[(String, Long, Long), Long] = {
+    val sc = spark.sparkContext
+    val conf = sc.broadcast(new org.apache.spark.SerializableWritable(spark.sessionState.newHadoopConf()))
+    try sc.parallelize(files, math.min(files.length, sc.defaultParallelism)).map { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f._1), conf.value.value))
+      try f -> reader.getRecordCount finally reader.close()
+    }.collect().toMap
+    finally conf.destroy()
+  }
 
   override def sidecar(table: String, suffix: String): String =
     table + "/_" + suffix
@@ -173,10 +282,7 @@ final class ParquetTableIO(root: String = "") extends TableIO {
     val after = countRows(spark, table)
     require(after == before, s"compact: $table has $after rows after swap, expected $before")
     fs.delete(pre, true)
-    val nFiles = fs.listStatus(main)
-      .count(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-    (before, nFiles.toLong)
+    (before, dataFiles(spark, table).length.toLong)
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -442,6 +442,176 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** ParquetTableIO that counts reads and footer counts per table, can
+    * fail the lineage sidecar write (the crash window), and records how
+    * often the sink was read when its sidecar was written — the commit's
+    * own sink reads.
+    */
+  private final class CountingIO extends TableIO {
+    private val inner = new ParquetTableIO()
+    val reads = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    val counts = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    var sinkReadsAtSidecarWrite = -1
+    var crashSidecar = false
+    def reset(): Unit = { reads.clear(); counts.clear(); sinkReadsAtSidecarWrite = -1 }
+    override def read(sp: SparkSession, t: String) = { reads(t) += 1; inner.read(sp, t) }
+    override def read(sp: SparkSession, t: String, schema: org.apache.spark.sql.types.StructType) = {
+      reads(t) += 1; inner.read(sp, t, schema)
+    }
+    override def write(df: org.apache.spark.sql.DataFrame, t: String): Unit = {
+      if (t.endsWith("/_lineage")) {
+        if (crashSidecar) throw new IllegalStateException("simulated crash before sidecar commit")
+        sinkReadsAtSidecarWrite = reads(t.stripSuffix("/_lineage"))
+      }
+      inner.write(df, t)
+    }
+    override def append(df: org.apache.spark.sql.DataFrame, t: String): Unit = inner.append(df, t)
+    override def appendCommitted(df: org.apache.spark.sql.DataFrame, t: String) =
+      inner.appendCommitted(df, t)
+    override def sidecar(t: String, suffix: String) = inner.sidecar(t, suffix)
+    override def countRows(sp: SparkSession, t: String) = { counts(t) += 1; inner.countRows(sp, t) }
+    override def drop(sp: SparkSession, t: String): Unit = inner.drop(sp, t)
+    override def compact(sp: SparkSession, t: String, n: Int) = inner.compact(sp, t, n)
+  }
+
+  /** The sink's lineage sidecar, and a full re-derive over the whole sink
+    * stamped with `runId`, both sorted by part_key.
+    */
+  private def sidecarAndRederive(out: String, runId: String): (Seq[LineageRow], Seq[LineageRow]) = {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    (spark.read.parquet(out + "/_lineage").as[LineageRow].collect().toSeq.sortBy(_.part_key),
+      Lineage.fromOutput(TableIO.parquet.read(spark, out), runId).collect().toSeq.sortBy(_.part_key))
+  }
+
+  /** doneSet → resumeFilter → extractToSink(resume = true), as Submit runs a restart. */
+  private def restart(io: TableIO, docs: Dataset[Doc], out: String, runId: String,
+      nParts: Int): Unit = {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    val todo = Lineage.doneSet(io, spark, out) match {
+      case Some(done) => Lineage.resumeFilter(docs.toDF(), done, nParts).as[Doc]
+      case None => docs
+    }
+    Pipeline.extractToSink(todo, runId, out, Pipeline.Config(), nParts, io, resume = true)
+  }
+
+  test("a resumed commit merges the sidecar from the appended files: equal to a full re-derive, no sink read") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.col
+    val nParts = 8
+    val docs = Corpus.generate(spark, 16, nPartitions = 4)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-merge").toString
+    val out = tmp + "/sink"
+    val io = new CountingIO
+    try {
+      val firstHalf = docs.toDF().filter(Lineage.partKey(col("doc_id"), nParts) < 4).as[Doc]
+      Pipeline.extractToSink(firstHalf, "run-1", out, Pipeline.Config(), nParts, io)
+      // the other half, a no-op, and a no-op after compaction: each commit
+      // merges (the sink is never read before the sidecar is written, and
+      // only footer counts touch it: one in doneSet, one in the commit)
+      // and leaves exactly the rows a full re-derive would
+      for ((runId, compactFirst) <- Seq(("run-2", false), ("run-3", false), ("run-4", true))) {
+        if (compactFirst) io.compact(spark, out, 2)
+        io.reset()
+        restart(io, docs, out, runId, nParts)
+        assert(io.sinkReadsAtSidecarWrite == 0, s"$runId re-aggregated the sink: ${io.reads}")
+        assert(io.counts(out) == 2, s"$runId: ${io.counts}")
+        val (side, full) = sidecarAndRederive(out, runId)
+        assert(side == full, runId)
+        assert(side.map(_.n_docs).sum == 16)
+      }
+      assert(spark.read.parquet(out).select("doc_id").distinct().count() == 16)
+    } finally
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  test("parquet crash window between sink commit and sidecar write: the merge is refused, the re-derive heals") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.col
+    val nParts = 8
+    val docs = Corpus.generate(spark, 12, nPartitions = 2)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-crash").toString
+    val out = tmp + "/sink"
+    val io = new CountingIO
+    try {
+      val firstHalf = docs.toDF().filter(Lineage.partKey(col("doc_id"), nParts) < 4).as[Doc]
+      Pipeline.extractToSink(firstHalf, "run-1", out, Pipeline.Config(), nParts, io)
+      // run 2: the sink append commits, the sidecar write dies — the
+      // sidecar still claims run-1's rows only
+      io.crashSidecar = true
+      intercept[IllegalStateException](restart(io, docs, out, "run-2", nParts))
+      io.crashSidecar = false
+      assert(spark.read.parquet(out).count() == 12)
+      // run 3: doneSet distrusts the stale sidecar (output scan), nothing
+      // is left to extract, and the commit's merge (stale prior + an empty
+      // append) fails the footer count, so the sidecar is re-derived
+      io.reset()
+      restart(io, docs, out, "run-3", nParts)
+      assert(io.sinkReadsAtSidecarWrite == 2, s"merge of a stale sidecar was trusted: ${io.reads}")
+      assert(spark.read.parquet(out).count() == 12)
+      assert(spark.read.parquet(out).select("doc_id").distinct().count() == 12)
+      val (side, full) = sidecarAndRederive(out, "run-3")
+      assert(side == full)
+      // healed: the next doneSet trusts the sidecar again
+      io.reset()
+      val done = Lineage.doneSet(io, spark, out).get
+      assert(io.reads(out) == 0, io.reads.toString)
+      assert(done.collect().map(_.getLong(0)).toSet == side.map(_.part_key).toSet)
+    } finally
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  test("merged max_doc_id follows Spark's UTF-8 binary order and ignores null ids") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    // U+1F600 (a surrogate pair in UTF-16) sorts below U+FF01 in Java's
+    // compareTo and above it in UTF-8 byte order, which Spark's max uses
+    val (bmp, astral) = ("doc-\uFF01", "doc-\uD83D\uDE00")
+    assert(bmp.compareTo(astral) > 0)
+    assert(Lineage.maxDocId(bmp, astral) == astral && Lineage.maxDocId(astral, bmp) == astral)
+    assert(Lineage.maxDocId(null, bmp) == bmp && Lineage.maxDocId(bmp, null) == bmp)
+    val page = Corpus.generate(spark, 1, nPartitions = 1).collect().head
+    val tmp = java.nio.file.Files.createTempDirectory("graft-maxid").toString
+    val out = tmp + "/sink"
+    val io = new CountingIO
+    try {
+      // nParts = 1: every id, the null one included, lands in one bucket
+      Pipeline.extractToSink(Seq(page.copy(doc_id = null)).toDS(), "run-0", out,
+        Pipeline.Config(), 1, io)
+      for ((id, i) <- Seq(bmp, astral, null).zipWithIndex) {
+        io.reset()
+        Pipeline.extractToSink(Seq(page.copy(doc_id = id)).toDS(), s"run-${i + 1}", out,
+          Pipeline.Config(), 1, io, resume = true)
+        assert(io.sinkReadsAtSidecarWrite == 0, s"run-${i + 1} did not merge")
+        val (side, full) = sidecarAndRederive(out, s"run-${i + 1}")
+        assert(side == full, s"run-${i + 1}")
+        assert(side.map(_.max_doc_id) == Seq(if (id == null) astral else id))
+      }
+    } finally
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  test("extractToSink records the oversize gate as a coverage row") {
+    implicit val s: SparkSession = spark
+    import org.apache.spark.sql.functions.{col, size}
+    val docs = Corpus.generate(spark, 12, seed = 7L, oversizeFraction = 0.25, nPartitions = 2)
+    val threshold = 64
+    val giants = docs.toDF().filter(size(col("spans")) > threshold).count()
+    assert(giants > 0, "test setup: need giants in the corpus")
+    val tmp = java.nio.file.Files.createTempDirectory("graft-gate").toString
+    try {
+      Pipeline.extractToSink(docs, "gate", tmp + "/sink", Pipeline.Config(oversizeSpans = threshold))
+      val row = Coverage.latest("extract")
+      assert(row.exists(_.kind == "oversize_gate"), row.toString)
+      assert(row.get.metrics("oversize_docs") == giants.toDouble)
+      assert(row.get.metrics("gate_wait_ms") >= 0.0)
+    } finally
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
   test("TableIO parquet seam round-trips a table") {
     val s = spark
     import s.implicits._
@@ -454,6 +624,34 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
+  }
+
+  test("parquet appendCommitted reads back exactly the appended rows; countRows equals Spark's count") {
+    implicit val s: SparkSession = spark
+    val tmp = java.nio.file.Files.createTempDirectory("graft-count").toString
+    val t = tmp + "/t"
+    val io = new ParquetTableIO()
+    try {
+      def check(expected: Long): Unit = {
+        assert(io.countRows(spark, t) == expected)
+        assert(spark.read.parquet(t).count() == expected)
+      }
+      io.write(spark.range(100).toDF("id").repartition(3), t)
+      check(100)
+      // counted files are reused, the appended one is new; the append names
+      // only its own rows
+      val added = io.appendCommitted(spark.range(1000, 1007).toDF("id"), t).get
+      assert(added.collect().map(_.getLong(0)).sorted.toSeq == (1000L until 1007L))
+      check(107)
+      // an append of nothing commits a 0-row file
+      assert(io.appendCommitted(spark.range(0).toDF("id"), t).get.count() == 0)
+      check(107)
+      // compaction replaces every file
+      io.compact(spark, t, 1)
+      check(107)
+      intercept[org.apache.spark.sql.AnalysisException](io.countRows(spark, tmp + "/missing"))
+    } finally
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
   test("Lineage.partKey buckets doc ids evenly: every bucket used, bounded skew") {
