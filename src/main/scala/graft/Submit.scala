@@ -83,8 +83,9 @@ object Submit {
     // See [[graft.spark.TableIO.compact]] for the crash-window contract.
     opts.get("compact").map(_.toInt).foreach { target =>
       val (n, files) = io.compact(spark, out, target)
-      graft.spark.Coverage.record(spark, "submit_compact", "sink_compaction",
-        Map("n_rows" -> n.toDouble, "n_files" -> files.toDouble))
+      graft.spark.Coverage.record("submit_compact", "sink_compaction",
+        Seq((out, n, files)).toDF("sink", "n_rows", "n_files")
+          .withColumn("status", org.apache.spark.sql.functions.lit("ok")))
       println(s"[submit] compacted sink=$out rows=$n files=$files")
     }
     // persist everything the run's capped/gated operators recorded as a

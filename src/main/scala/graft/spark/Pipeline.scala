@@ -1,7 +1,6 @@
 package graft.spark
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
@@ -241,7 +240,7 @@ object Pipeline {
     // contract — see [[TableIO.commitWithSidecar]].
     val written = io.commitWithSidecar(out, outPath,
       committed => Lineage.fromOutput(committed, runId).toDF(),
-      appended => Lineage.mergeAppended(io, outPath, appended, runId),
+      (appended, sinkRows) => Lineage.mergeAppended(io, outPath, appended, sinkRows, runId),
       "lineage", resume)
     // the sink write is the action that ran the plan → gate stats are live
     Coverage.record(spark, "extract", "oversize_gate", Map(
@@ -321,11 +320,12 @@ object Lineage {
     * `compareTo` disagrees on supplementary-plane chars), nulls ignored —
     * so the rows equal a full [[fromOutput]] re-derive. None (→ the full
     * re-derive) when the prior sidecar is missing or unreadable, or when
-    * the merged n_docs do not sum to the sink's footer count: a sidecar
-    * left stale by a crash after an earlier sink commit fails that check.
+    * the merged n_docs do not sum to `tableRows`, the sink's row count
+    * after the append: a sidecar left stale by a crash after an earlier
+    * sink commit fails that check.
     */
   private[spark] def mergeAppended(io: TableIO, table: String, appended: DataFrame,
-      runId: String)(implicit spark: SparkSession): Option[DataFrame] = {
+      tableRows: Long, runId: String)(implicit spark: SparkSession): Option[DataFrame] = {
     import spark.implicits._
     // one collect: the prior sidecar's rows and the appended rows' aggregate
     scala.util.Try(
@@ -336,7 +336,7 @@ object Lineage {
         LineageRow(runId, a.part_key, a.n_docs + b.n_docs, a.n_errors + b.n_errors,
           a.sum_text_length + b.sum_text_length, maxDocId(a.max_doc_id, b.max_doc_id))
       }.values.toSeq.sortBy(_.part_key)
-      if (merged.iterator.map(_.n_docs).sum != io.countRows(spark, table)) None
+      if (merged.iterator.map(_.n_docs).sum != tableRows) None
       else Some(merged.toDS().toDF().coalesce(1))
     }
   }
@@ -397,15 +397,13 @@ object Lineage {
     * The done-key set is collected once (bounded by nParts, see class doc)
     * and pushed into a codegen'd `InSet` predicate — the resumed scan stays
     * MAP-ONLY: no shuffle of the corpus, no join, no BroadcastExchange.
-    * A done-set that is a local relation ([[doneSet]]'s validated
-    * sidecar keys) is collected and deduplicated without a job.
+    * Every caller passes at most nParts distinct keys ([[doneSet]]'s
+    * sidecar keys or its distinct output-scan keys, or a lineage), so
+    * they are collected as they are and deduplicated on the driver.
     */
   def resumeFilter(docs: DataFrame, doneLineage: DataFrame, nParts: Int = defaultParts): DataFrame = {
-    val keys = doneLineage.select(col("part_key").cast("long"))
-    val rows =
-      if (keys.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) keys.collect()
-      else keys.distinct().collect()
-    val doneKeys: Seq[Long] = rows.iterator.map(_.getLong(0)).distinct.toSeq
+    val doneKeys: Seq[Long] = doneLineage.select(col("part_key").cast("long"))
+      .collect().iterator.map(_.getLong(0)).distinct.toSeq
     if (doneKeys.isEmpty) docs
     else docs.filter(!partKey(col("doc_id"), nParts).isInCollection(doneKeys))
   }

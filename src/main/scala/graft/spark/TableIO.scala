@@ -33,14 +33,15 @@ trait TableIO {
     * prior run must survive — see [[Pipeline.extractToSink]]).
     */
   def append(df: DataFrame, table: String): Unit
-  /** [[append]], then the rows of exactly what it committed, read under
-    * `df`'s schema: what a commit added, so a derived sidecar can be
-    * merged instead of re-derived from the whole table
-    * ([[commitWithSidecar]]). None when the format cannot name them —
-    * the default, and the catalog path (Iceberg's form is the snapshot
-    * diff, which needs its runtime).
+  /** [[append]], then what it committed: the rows of exactly the
+    * appended files, read under `df`'s schema, and the table's row count
+    * after the append ([[countRows]]'s figure). A derived sidecar can
+    * then be merged instead of re-derived from the whole table
+    * ([[commitWithSidecar]]). None when the format cannot name the
+    * files — the default, and the catalog path (Iceberg's form is the
+    * snapshot diff, which needs its runtime).
     */
-  def appendCommitted(df: DataFrame, table: String): Option[DataFrame] = {
+  def appendCommitted(df: DataFrame, table: String): Option[(DataFrame, Long)] = {
     append(df, table)
     None
   }
@@ -68,8 +69,8 @@ trait TableIO {
     * A fresh run (`resume = false`) replaces the table and derives the
     * sidecar with `sidecarOf` over the whole committed table. A resumed
     * run appends; when the format names the files the append committed
-    * ([[appendCommitted]]), `mergeAppended` receives their rows and
-    * returns the merged sidecar (O(appended output + sidecar), see
+    * ([[appendCommitted]]), `mergeAppended` receives their rows and the
+    * table's row count after the append, and returns the merged sidecar (O(appended output + sidecar), see
     * [[Lineage.mergeAppended]]), or None when it cannot vouch for the
     * merge — then, and on formats that name nothing, `sidecarOf` runs
     * over the whole committed table: the one fallback, and the path that
@@ -93,7 +94,7 @@ trait TableIO {
     * pretending atomicity it cannot have.
     */
   def commitWithSidecar(main: DataFrame, table: String,
-      sidecarOf: DataFrame => DataFrame, mergeAppended: DataFrame => Option[DataFrame],
+      sidecarOf: DataFrame => DataFrame, mergeAppended: (DataFrame, Long) => Option[DataFrame],
       suffix: String, resume: Boolean): DataFrame = {
     val spark = main.sparkSession
     val appended =
@@ -101,7 +102,7 @@ trait TableIO {
       else { write(main, table); None }
     // the merge path writes the sidecar without touching the sink's data
     lazy val written = read(spark, table, main.schema)
-    write(appended.flatMap(mergeAppended).getOrElse(sidecarOf(written)), sidecar(table, suffix))
+    write(appended.flatMap(mergeAppended.tupled).getOrElse(sidecarOf(written)), sidecar(table, suffix))
     written
   }
 
@@ -161,75 +162,62 @@ final class ParquetTableIO(root: String = "") extends TableIO {
   override def append(df: DataFrame, table: String): Unit =
     df.write.mode("append").parquet(path(table))
 
-  /** The data files the append added: the table's file listing before
-    * and after it, read under `df`'s schema — listing only, no job.
+  /** The data files the append added: the table's listing before and
+    * after it, read under `df`'s schema (listing only, no job). The
+    * table's count after the append reuses the last [[countRows]] of this
+    * application when that count covered exactly the files there before
+    * the append — as [[Lineage.doneSet]]'s count does right before a
+    * restart's append — and adds the count of the added files' footers;
+    * otherwise it is a whole [[countRows]].
     */
-  override def appendCommitted(df: DataFrame, table: String): Option[DataFrame] = {
+  override def appendCommitted(df: DataFrame, table: String): Option[(DataFrame, Long)] = {
     val spark = df.sparkSession
-    def files: Set[String] = {
-      val p = new org.apache.hadoop.fs.Path(path(table))
-      if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) Set.empty
-      else dataFiles(spark, table).map(_._1).toSet
-    }
-    val before = files
+    val before = dataFiles(spark, table)
     append(df, table)
-    val added = (files -- before).toSeq.sorted
-    Some(
+    val added = dataFiles(spark, table).diff(before).map(_._1)
+    val rows =
       if (added.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), df.schema)
-      else spark.read.schema(df.schema).parquet(added: _*))
+      else spark.read.schema(df.schema).parquet(added: _*)
+    val tableRows = lastCount(spark, table).get match {
+      case Some((files, n)) if files == before.toSet =>
+        n + (if (added.isEmpty) 0L else spark.read.schema(new StructType()).parquet(added: _*).count())
+      case _ => countRows(spark, table)
+    }
+    Some((rows, tableRows))
   }
 
-  /** The files a scan of `table` reads, as (path, length, modification
-    * time): Spark's own listing, which skips `_`/`.`-prefixed entries such
-    * as the nested sidecars. Listing only, no job; fails like [[read]] on
-    * a missing table.
+  /** The table's data files as (path, length, modification time): its
+    * directory listing without the `_`/`.`-prefixed entries (the nested
+    * sidecars, `_SUCCESS`, checksums) that a scan skips. Empty when the
+    * table does not exist.
     */
   private def dataFiles(spark: SparkSession, table: String): Seq[(String, Long, Long)] = {
-    import org.apache.spark.sql.execution.datasources._
-    read(spark, table, new StructType()).queryExecution.analyzed.collect {
-      case r: LogicalRelation => r.relation
-    }.flatMap {
-      case h: HadoopFsRelation => h.location match {
-        case index: PartitioningAwareFileIndex => index.allFiles()
-        case other => sys.error(s"unexpected file index ${other.getClass} for $table")
-      }
-      case other => sys.error(s"unexpected relation ${other.getClass} for $table")
-    }.map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+    val p = new org.apache.hadoop.fs.Path(path(table))
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
   }
 
-  /** The sum of the data files' footer row counts: no column is read and
-    * no schema inferred. A parquet file is immutable, so the application
-    * keeps each file's count under its (path, length, modification time),
-    * and a count reads only the footers of files committed since the last
-    * one, in one Spark job. A restart's count after its append thus reads
-    * the footers of what it appended, not of the whole sink.
+  /** The footers answer the count under an empty read schema: no column
+    * is read and no schema inferred. The count is kept with the listing
+    * it covers, for the count after this application's next append
+    * ([[appendCommitted]]); every call itself reads all the footers.
     */
   override def countRows(spark: SparkSession, table: String): Long = {
-    import scala.jdk.CollectionConverters._
-    val files = dataFiles(spark, table).filter(_._2 > 0) // Spark's scan skips empty files too
-    val known = SessionArtifacts.memo("parquet row counts", spark, path(table))(
-      new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), java.lang.Long]())
-    val cached = files.flatMap(f => Option(known.get(f)).map(n => f -> n.longValue)).toMap
-    val unknown = files.filterNot(cached.contains)
-    val counted = if (unknown.isEmpty) Map.empty[(String, Long, Long), Long] else footerCounts(spark, unknown)
-    counted.foreach { case (f, n) => known.put(f, n) }
-    known.keySet.retainAll(files.toSet.asJava) // only the table's current files
-    files.iterator.map(f => cached.getOrElse(f, counted(f))).sum
+    val n = read(spark, table, new StructType()).count()
+    lastCount(spark, table).set(Some((dataFiles(spark, table).toSet, n)))
+    n
   }
 
-  /** Row counts from the footers of `files`, read in one Spark job. */
-  private def footerCounts(spark: SparkSession,
-      files: Seq[(String, Long, Long)]): Map[(String, Long, Long), Long] = {
-    val sc = spark.sparkContext
-    val conf = sc.broadcast(new org.apache.spark.SerializableWritable(spark.sessionState.newHadoopConf()))
-    try sc.parallelize(files, math.min(files.length, sc.defaultParallelism)).map { f =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f._1), conf.value.value))
-      try f -> reader.getRecordCount finally reader.close()
-    }.collect().toMap
-    finally conf.destroy()
-  }
+  /** The last [[countRows]] of `table` in this application: the listing
+    * it covered and the count.
+    */
+  private def lastCount(spark: SparkSession, table: String) =
+    SessionArtifacts.memo("parquet row count", spark, path(table))(
+      new java.util.concurrent.atomic.AtomicReference[Option[(Set[(String, Long, Long)], Long)]](None))
 
   override def sidecar(table: String, suffix: String): String =
     table + "/_" + suffix

@@ -509,15 +509,15 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val firstHalf = docs.toDF().filter(Lineage.partKey(col("doc_id"), nParts) < 4).as[Doc]
       Pipeline.extractToSink(firstHalf, "run-1", out, Pipeline.Config(), nParts, io)
       // the other half, a no-op, and a no-op after compaction: each commit
-      // merges (the sink is never read before the sidecar is written, and
-      // only footer counts touch it: one in doneSet, one in the commit)
-      // and leaves exactly the rows a full re-derive would
+      // merges (the sink is never read before the sidecar is written; only
+      // doneSet's footer count touches it, and the commit's count reuses
+      // that one) and leaves exactly the rows a full re-derive would
       for ((runId, compactFirst) <- Seq(("run-2", false), ("run-3", false), ("run-4", true))) {
         if (compactFirst) io.compact(spark, out, 2)
         io.reset()
         restart(io, docs, out, runId, nParts)
         assert(io.sinkReadsAtSidecarWrite == 0, s"$runId re-aggregated the sink: ${io.reads}")
-        assert(io.counts(out) == 2, s"$runId: ${io.counts}")
+        assert(io.counts(out) == 1, s"$runId: ${io.counts}")
         val (side, full) = sidecarAndRederive(out, runId)
         assert(side == full, runId)
         assert(side.map(_.n_docs).sum == 16)
@@ -547,7 +547,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(spark.read.parquet(out).count() == 12)
       // run 3: doneSet distrusts the stale sidecar (output scan), nothing
       // is left to extract, and the commit's merge (stale prior + an empty
-      // append) fails the footer count, so the sidecar is re-derived
+      // append) fails the sink's count, so the sidecar is re-derived
       io.reset()
       restart(io, docs, out, "run-3", nParts)
       assert(io.sinkReadsAtSidecarWrite == 2, s"merge of a stale sidecar was trusted: ${io.reads}")
@@ -626,7 +626,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("parquet appendCommitted reads back exactly the appended rows; countRows equals Spark's count") {
+  test("parquet appendCommitted reads back exactly the appended rows and counts the table after it") {
     implicit val s: SparkSession = spark
     val tmp = java.nio.file.Files.createTempDirectory("graft-count").toString
     val t = tmp + "/t"
@@ -636,19 +636,28 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(io.countRows(spark, t) == expected)
         assert(spark.read.parquet(t).count() == expected)
       }
-      io.write(spark.range(100).toDF("id").repartition(3), t)
+      def append(from: Long, until: Long, expected: Long): Unit = {
+        val (rows, tableRows) = io.appendCommitted(spark.range(from, until).toDF("id"), t).get
+        assert(rows.collect().map(_.getLong(0)).sorted.toSeq == (from until until))
+        assert(tableRows == expected)
+      }
+      // into a missing table, with no count before it
+      append(0, 100, 100)
       check(100)
-      // counted files are reused, the appended one is new; the append names
-      // only its own rows
-      val added = io.appendCommitted(spark.range(1000, 1007).toDF("id"), t).get
-      assert(added.collect().map(_.getLong(0)).sorted.toSeq == (1000L until 1007L))
-      check(107)
+      // after a count of exactly the files before it: that count plus the
+      // appended rows
+      append(1000, 1007, 107)
+      // after a write no count has seen: a whole count
+      io.append(spark.range(2000, 2003).toDF("id"), t)
+      append(3000, 3001, 111)
+      check(111)
       // an append of nothing commits a 0-row file
-      assert(io.appendCommitted(spark.range(0).toDF("id"), t).get.count() == 0)
-      check(107)
-      // compaction replaces every file
+      append(0, 0, 111)
+      check(111)
+      // compaction replaces every file; its own count covers the new ones
       io.compact(spark, t, 1)
-      check(107)
+      append(4000, 4002, 113)
+      check(113)
       intercept[org.apache.spark.sql.AnalysisException](io.countRows(spark, tmp + "/missing"))
     } finally
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
