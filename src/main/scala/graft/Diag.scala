@@ -235,7 +235,7 @@ object Diag {
     "e3_query" -> query("e3_cosine_ivf"),
     "x3_query" -> query("x3_extract_resume"),
     "m1_query" -> query("m1_media_features"),
-    // x3_extract_resume taken apart: corpus generation, the resume InSet
+    // x3_extract_resume taken apart: corpus generation, the resume bitmap
     // filter, extraction (x3_query is the whole query); and x1 uncached
     "gen_only" -> (in => in.corpus.toDF()),
     "gen_filter" -> (in => in.resumed),

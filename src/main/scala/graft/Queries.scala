@@ -66,8 +66,8 @@ object Queries {
 
   /** Lineage + resume path: simulate a first run that completed half the
     * resume buckets, then resume — the filter is a map-only codegen'd
-    * InSet on the deterministic part_key (no corpus shuffle, no broadcast;
-    * see [[graft.spark.Lineage]]). Rows-only.
+    * bitmap test of the deterministic part_key (no corpus shuffle, no
+    * broadcast; see [[graft.spark.Lineage.notDone]]). Rows-only.
     */
   def x3_extract_resume(s: SparkSession, dir: String): DataFrame = {
     implicit val sp: SparkSession = s
@@ -79,13 +79,12 @@ object Queries {
     val doneLineage = s.range(nParts / 2).select(col("id").as("part_key"))
     // Generation-side twin of the resume predicate: docs in completed
     // buckets would be synthesized (the expensive step) only for
-    // resumeFilter to drop them — prune them BEFORE docHtml via the same
-    // partKey-over-doc_id predicate. resumeFilter still runs below (the
-    // registered resume surface, and the correctness guard: it drops
-    // nothing extra, so output rows are identical to an unpruned run).
+    // resumeFilter to drop them — prune them BEFORE docHtml with the same
+    // Lineage.notDone predicate over the doc_id. resumeFilter still runs
+    // below (the registered resume surface, and the correctness guard: it
+    // drops nothing extra, so output rows are identical to an unpruned run).
     val all = graft.spark.Corpus.generate(s, n, idFilter = id =>
-      !graft.spark.Lineage.partKey(graft.spark.Corpus.docIdCol(id), nParts)
-        .isInCollection(doneKeys))
+      graft.spark.Lineage.notDone(graft.spark.Corpus.docIdCol(id), doneKeys, nParts))
     val remaining = graft.spark.Lineage.resumeFilter(all.toDF(), doneLineage, nParts)
       .as[graft.spark.Doc](enc)
     graft.spark.Pipeline.extract(remaining)

@@ -12,27 +12,9 @@ final class Cleaner(dom: Dom, opts: Options,
     /** the document's site-rule context (registry phases
       * `SiteRuleRegistry.swift:218-303`) */
     siteCtx: SiteRules.Ctx) {
+  import Cleaner._
 
   private val dataTables = new java.util.HashSet[Integer]()
-
-  private val imgExt = java.util.regex.Pattern.compile(
-    "\\.(jpg|jpeg|png|webp)", java.util.regex.Pattern.CASE_INSENSITIVE)
-  private val srcsetLike = java.util.regex.Pattern.compile(
-    "\\.(jpg|jpeg|png|webp)(\\S*)\\s+\\d", java.util.regex.Pattern.CASE_INSENSITIVE)
-  private val srcLike = java.util.regex.Pattern.compile(
-    "^\\s*\\S+\\.(jpg|jpeg|png|webp)\\S*\\s*$", java.util.regex.Pattern.CASE_INSENSITIVE)
-  private val b64Prefix = java.util.regex.Pattern.compile(
-    "^data:([^;,]+);base64,", java.util.regex.Pattern.CASE_INSENSITIVE)
-  private val adWord = java.util.regex.Pattern.compile(
-    "^(ad(vertising|vertisement)?|pub(licité)?|werb(ung)?|广告|Реклама|Anuncio)$",
-    java.util.regex.Pattern.CASE_INSENSITIVE | java.util.regex.Pattern.UNICODE_CASE)
-  private val loadingWord = java.util.regex.Pattern.compile(
-    "^((loading|正在加载|Загрузка|chargement|cargando)(…|\\.\\.\\.)?)$",
-    java.util.regex.Pattern.CASE_INSENSITIVE | java.util.regex.Pattern.UNICODE_CASE)
-  private val adContainer = java.util.regex.Pattern.compile(
-    "(^|\\s|[-_])(ad|ads|advert|advertisement)(\\s|[-_]|\\d|$)")
-  private val floatPattern = java.util.regex.Pattern.compile(
-    "(^|;)\\s*float\\s*:\\s*(left|right)\\b", java.util.regex.Pattern.CASE_INSENSITIVE)
 
   private def linkDensity(id: Int): Double = DomOps.linkDensity(dom, id)
 
@@ -803,8 +785,6 @@ final class Cleaner(dom: Dom, opts: Options,
   // ------------------------------------------------------------------ C7
 
   private def removeShortShareElements(articleContent: Int): Unit = {
-    val shareMarker = java.util.regex.Pattern.compile(
-      "(^|[\\s_-])(share|sharedaddy)([\\s_-]|$)", java.util.regex.Pattern.CASE_INSENSITIVE)
     val tops = dom.childElements(articleContent)
     var i = 0
     while (i < tops.length) {
@@ -1280,4 +1260,28 @@ final class Cleaner(dom: Dom, opts: Options,
     }
     false
   }
+}
+
+object Cleaner {
+  // compiled once: a Pattern is immutable and thread-safe, a Cleaner is per document
+  private val imgExt = java.util.regex.Pattern.compile(
+    "\\.(jpg|jpeg|png|webp)", java.util.regex.Pattern.CASE_INSENSITIVE)
+  private val srcsetLike = java.util.regex.Pattern.compile(
+    "\\.(jpg|jpeg|png|webp)(\\S*)\\s+\\d", java.util.regex.Pattern.CASE_INSENSITIVE)
+  private val srcLike = java.util.regex.Pattern.compile(
+    "^\\s*\\S+\\.(jpg|jpeg|png|webp)\\S*\\s*$", java.util.regex.Pattern.CASE_INSENSITIVE)
+  private val b64Prefix = java.util.regex.Pattern.compile(
+    "^data:([^;,]+);base64,", java.util.regex.Pattern.CASE_INSENSITIVE)
+  private val adWord = java.util.regex.Pattern.compile(
+    "^(ad(vertising|vertisement)?|pub(licité)?|werb(ung)?|广告|Реклама|Anuncio)$",
+    java.util.regex.Pattern.CASE_INSENSITIVE | java.util.regex.Pattern.UNICODE_CASE)
+  private val loadingWord = java.util.regex.Pattern.compile(
+    "^((loading|正在加载|Загрузка|chargement|cargando)(…|\\.\\.\\.)?)$",
+    java.util.regex.Pattern.CASE_INSENSITIVE | java.util.regex.Pattern.UNICODE_CASE)
+  private val adContainer = java.util.regex.Pattern.compile(
+    "(^|\\s|[-_])(ad|ads|advert|advertisement)(\\s|[-_]|\\d|$)")
+  private val floatPattern = java.util.regex.Pattern.compile(
+    "(^|;)\\s*float\\s*:\\s*(left|right)\\b", java.util.regex.Pattern.CASE_INSENSITIVE)
+  private val shareMarker = java.util.regex.Pattern.compile(
+    "(^|[\\s_-])(share|sharedaddy)([\\s_-]|$)", java.util.regex.Pattern.CASE_INSENSITIVE)
 }

@@ -311,12 +311,13 @@ object SiteRules {
     }
   }
 
+  private val midRe = java.util.regex.Pattern.compile("^mid\\d+-wrapper$")
+
   /** `NYTimesContinueReadingWrapperRule`: midXX-wrapper rank/continue
     * blocks.
     */
   private def nyTimesContinueReadingWrapper(articleContent: Int, ctx: Ctx): Unit = {
     val dom = ctx.dom
-    val midRe = java.util.regex.Pattern.compile("^mid\\d+-wrapper$")
     for (wrapper <- Select.select(dom, articleContent, "div[id$=-wrapper]")) {
       if (dom.parent(wrapper) != -1 &&
           midRe.matcher(dom.idAttr(wrapper).toLowerCase).matches() &&
@@ -456,6 +457,8 @@ object SiteRules {
     }
   }
 
+  private val countRe = java.util.regex.Pattern.compile("^[0-9]{1,3}$")
+
   /** `EngadgetSlideshowIconRule`: slideshow thumbnails, count badges,
     * slideshow icons, and single-price promo unwraps.
     */
@@ -463,7 +466,6 @@ object SiteRules {
     val dom = ctx.dom
     Select.select(dom, articleContent, "[data-engadget-slideshow-id] ul")
       .reverse.foreach(dom.remove)
-    val countRe = java.util.regex.Pattern.compile("^[0-9]{1,3}$")
     for (badge <- Select.select(dom, articleContent, "div").reverse) {
       if (dom.parent(badge) != -1) {
         val uses = Select.select(dom, badge, "svg use")
@@ -1662,13 +1664,14 @@ object SiteRules {
     }
   }
 
+  private val tokenRe = java.util.regex.Pattern.compile(
+    "(^|\\s|[-_])(share|sharedaddy)(\\s|[-_]|$)")
+
   /** `GuardianShareElementsRule`: share/social controls by class/id token,
     * excluding media figures like `fig--has-shares`.
     */
   private def guardianShareElements(articleContent: Int, ctx: Ctx): Unit = {
     val dom = ctx.dom
-    val tokenRe = java.util.regex.Pattern.compile(
-      "(^|\\s|[-_])(share|sharedaddy)(\\s|[-_]|$)")
     for (node <- Select.select(dom, articleContent,
         "[class*=share], [id*=share], [class*=sharedaddy], [id*=sharedaddy]").reverse) {
       if (dom.parent(node) != -1 && dom.tag(node) != "figure") {
@@ -3097,6 +3100,9 @@ object SiteRules {
     cur
   }
 
+  private val webMdPublication = java.util.regex.Pattern.compile("</a>(\\s*)<br\\s*/?>([^<]+)",
+    java.util.regex.Pattern.CASE_INSENSITIVE)
+
   /** `WebMDBylineRule`: restore multiline byline from div.author_fmt. */
   private def webMdByline(byline: Option[String], ctx: Ctx): Option[String] = {
     val dom = ctx.dom
@@ -3108,9 +3114,7 @@ object SiteRules {
     if (author.isEmpty) return byline
     val html = Serialize.innerHtml(dom, container)
     if (!html.toLowerCase.contains("webmd health news")) return byline
-    val p = java.util.regex.Pattern.compile("</a>(\\s*)<br\\s*/?>([^<]+)",
-      java.util.regex.Pattern.CASE_INSENSITIVE)
-    val m = p.matcher(html)
+    val m = webMdPublication.matcher(html)
     if (!m.find()) return byline
     var spacing = m.group(1)
     if (spacing.isEmpty || !spacing.contains("\n")) spacing = "\n"
@@ -3142,21 +3146,23 @@ object SiteRules {
     else byline
   }
 
+  private val yahooClockTime = java.util.regex.Pattern.compile("\\b\\d{1,2}:\\d{2}\\s*(?:AM|PM)\\b",
+    java.util.regex.Pattern.CASE_INSENSITIVE)
+  private val yahooDateEnd = java.util.regex.Pattern.compile("[A-Za-z]+\\s+\\d{1,2},\\s+\\d{4}$")
+
   /** `YahooBylineTimeRule`: restore trailing time from the story abbr. */
   private def yahooBylineTime(byline: Option[String], ctx: Ctx): Option[String] = {
     byline match {
       case None => None
       case Some(b) =>
         val dom = ctx.dom
-        if (java.util.regex.Pattern.compile("\\b\\d{1,2}:\\d{2}\\s*(?:AM|PM)\\b",
-            java.util.regex.Pattern.CASE_INSENSITIVE).matcher(b).find()) return byline
+        if (yahooClockTime.matcher(b).find()) return byline
         if (b.contains("By GILLIAN MOHNEY") && b.contains("March 11, 2015") && !b.contains("3:46 PM"))
           return Some(b + " 3:46 PM")
-        val dateEnd = java.util.regex.Pattern.compile("[A-Za-z]+\\s+\\d{1,2},\\s+\\d{4}$")
         val abbr = Select.selectFirst(dom, dom.document, "#mediacontentstory cite.byline abbr, cite.byline abbr")
         if (abbr != -1) {
           val abbrText = sTrim(innerText(dom, abbr))
-          val m = dateEnd.matcher(b)
+          val m = yahooDateEnd.matcher(b)
           if (abbrText.nonEmpty && m.find())
             return Some(b.substring(0, m.start()) + abbrText)
         }

@@ -28,13 +28,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - per-document failures become status/error columns, never task
   *     failures.
   *   - lineage rows keyed by [[Lineage.partKey]] make restarts resumable
-  *     (see [[Lineage.resumeFilter]]). A restart reads the ≤ nParts-row
-  *     sidecar, not the sink: its done-set costs one sidecar collect and
-  *     a footer count ([[TableIO.countRows]]), and its commit aggregates
-  *     only the files it appended and merges them into the sidecar
-  *     ([[Lineage.mergeAppended]]). The whole sink is re-aggregated only
-  *     on a fresh run, on the catalog path, and to heal a stale or
-  *     missing sidecar.
+  *     (see [[Lineage.resumeFilter]]: a map-only test of one nParts-bit
+  *     bitmap). A restart reads the ≤ nParts-row sidecar, not the sink:
+  *     its done-set costs one sidecar collect and a footer count
+  *     ([[TableIO.countRows]]), and its commit aggregates only the files
+  *     it appended and merges them into the sidecar
+  *     ([[Lineage.mergeAppended]]). A restart with no document left
+  *     reads only the corpus's doc_id column and appends nothing. The
+  *     whole sink is re-aggregated only on a fresh run, on the catalog
+  *     path, and to heal a stale or missing sidecar.
   */
 object Pipeline {
 
@@ -221,6 +223,13 @@ object Pipeline {
     * append is an atomic snapshot commit, which is what makes
     * lineage-from-committed-output exactly-once under task retry.
     *
+    * A resumed run first asks, reading only `doc_id`, whether any
+    * document is left. When none is, it commits nothing
+    * ([[TableIO.commitUnchanged]]): no corpus decode, no empty append,
+    * and the sidecar is the prior one merged with no rows, restamped
+    * with `runId`. If the sink is missing or the prior sidecar does not
+    * sum to its row count, the run commits as any resumed run does.
+    *
     * The oversize-gate stats of the run land as a [[Coverage]] row
     * (`extract`, `oversize_gate`), which Submit persists in `_coverage`.
     */
@@ -229,26 +238,36 @@ object Pipeline {
       io: TableIO = TableIO.parquet, resume: Boolean = false)(
       implicit spark: SparkSession): (Dataset[ExtractedDoc], Dataset[LineageRow]) = {
     import spark.implicits._
-    val (exDs, stats) = extractWithStats(docs, cfg)
-    val out = exDs.withColumn("part_key", Lineage.partKey(col("doc_id"), nParts))
-    // sink + lineage sidecar go through the TableIO commit seam as one
-    // logical commit: the sidecar (≤ nParts rows — O(nParts) restart via
-    // [[Lineage.doneSet]] instead of re-scanning a tens-of-TB output)
-    // derives from COMMITTED output and is always a full overwrite, so a
-    // resumed run's sidecar covers the union of every run so far. The
-    // crash window between the two writes is part of the documented
-    // contract — see [[TableIO.commitWithSidecar]].
-    val written = io.commitWithSidecar(out, outPath,
-      committed => Lineage.fromOutput(committed, runId).toDF(),
-      (appended, sinkRows) => Lineage.mergeAppended(io, outPath, appended, sinkRows, runId),
-      "lineage", resume)
-    // the sink write is the action that ran the plan → gate stats are live
+    val merge = (appended: DataFrame, sinkRows: Long) =>
+      Lineage.mergeAppended(io, outPath, appended, sinkRows, runId)
+    val unchanged =
+      if (resume && docs.select(col("doc_id")).isEmpty)
+        io.commitUnchanged(spark, outPath, sinkSchema, merge, "lineage")
+      else None
+    val (written, gate) = unchanged.map(_ -> (0L, 0L)).getOrElse {
+      val (exDs, stats) = extractWithStats(docs, cfg)
+      val out = exDs.withColumn("part_key", Lineage.partKey(col("doc_id"), nParts))
+      // sink + lineage sidecar go through the TableIO commit seam as one
+      // logical commit: the sidecar (≤ nParts rows — O(nParts) restart via
+      // [[Lineage.doneSet]] instead of re-scanning a tens-of-TB output)
+      // derives from COMMITTED output and is always a full overwrite, so a
+      // resumed run's sidecar covers the union of every run so far. The
+      // crash window between the two writes is part of the documented
+      // contract — see [[TableIO.commitWithSidecar]].
+      val w = io.commitWithSidecar(out, outPath,
+        committed => Lineage.fromOutput(committed, runId).toDF(), merge, "lineage", resume)
+      // the sink write is the action that ran the plan → gate stats are live
+      (w, (stats.nOversize.value.longValue, stats.gateWaitMs.value.longValue))
+    }
     Coverage.record(spark, "extract", "oversize_gate", Map(
-      "oversize_docs" -> stats.nOversize.value.doubleValue,
-      "gate_wait_ms" -> stats.gateWaitMs.value.doubleValue))
+      "oversize_docs" -> gate._1.toDouble, "gate_wait_ms" -> gate._2.toDouble))
     val extracted = written.drop("part_key").as[ExtractedDoc]
     (extracted, io.read(spark, io.sidecar(outPath, "lineage"), Lineage.schema).as[LineageRow])
   }
+
+  /** The sink's schema: an [[ExtractedDoc]] and its [[Lineage.partKey]]. */
+  private val sinkSchema: StructType =
+    Encoders.product[ExtractedDoc].schema.add("part_key", "long")
 
   /** Extraction quality metrics: one row per status with counts and text
     * volume — plain groupBy/agg, AQE-coalesced.
@@ -395,16 +414,26 @@ object Lineage {
   /** Resume: drop docs whose part_key completed in a previous run.
     *
     * The done-key set is collected once (bounded by nParts, see class doc)
-    * and pushed into a codegen'd `InSet` predicate — the resumed scan stays
-    * MAP-ONLY: no shuffle of the corpus, no join, no BroadcastExchange.
-    * Every caller passes at most nParts distinct keys ([[doneSet]]'s
-    * sidecar keys or its distinct output-scan keys, or a lineage), so
-    * they are collected as they are and deduplicated on the driver.
+    * into the [[notDone]] bitmap — the resumed scan stays MAP-ONLY: no
+    * shuffle of the corpus, no join, no BroadcastExchange.
     */
   def resumeFilter(docs: DataFrame, doneLineage: DataFrame, nParts: Int = defaultParts): DataFrame = {
-    val doneKeys: Seq[Long] = doneLineage.select(col("part_key").cast("long"))
-      .collect().iterator.map(_.getLong(0)).distinct.toSeq
+    val doneKeys = doneLineage.select(col("part_key").cast("long")).collect().map(_.getLong(0))
     if (doneKeys.isEmpty) docs
-    else docs.filter(!partKey(col("doc_id"), nParts).isInCollection(doneKeys))
+    else docs.filter(notDone(col("doc_id"), doneKeys, nParts))
+  }
+
+  /** "Not done": the doc's [[partKey]] is not among `doneKeys`. The keys
+    * become ONE literal bitmap of nParts bits (nParts/64 longs), tested
+    * with built-in, codegen'd functions, so the plan has the same few
+    * expressions at 1 done key as at nParts — an `IN` list costs a
+    * literal, and planning time, per key. Keys outside [0, nParts) are
+    * ignored: no doc's part_key can equal them.
+    */
+  def notDone(docId: Column, doneKeys: Iterable[Long], nParts: Int): Column = {
+    val bits = new Array[Long]((nParts + 63) / 64)
+    for (k <- doneKeys if k >= 0 && k < nParts) bits((k >>> 6).toInt) |= 1L << k
+    val key = partKey(docId, nParts)
+    bit_get(get(typedLit(bits), shiftright(key, 6).cast("int")), (key % 64).cast("int")) === 0
   }
 }

@@ -106,6 +106,30 @@ trait TableIO {
     written
   }
 
+  /** The resumed commit of a run with no row to append: the table is
+    * left as it is, and the sidecar is `mergeAppended` over no rows and
+    * the table's row count ([[tableRows]]). Returns the table read back
+    * under `schema`, or None — nothing written — when there is no table
+    * yet or the merge cannot vouch for the prior sidecar; the caller then
+    * commits through [[commitWithSidecar]], whose re-derive heals it.
+    */
+  def commitUnchanged(spark: SparkSession, table: String, schema: StructType,
+      mergeAppended: (DataFrame, Long) => Option[DataFrame], suffix: String): Option[DataFrame] =
+    tableRows(spark, table)
+      .flatMap(n => mergeAppended(spark.createDataFrame(java.util.Collections.emptyList[Row](), schema), n))
+      .map { merged =>
+        write(merged, sidecar(table, suffix))
+        read(spark, table, schema)
+      }
+
+  /** The table's row count, None when it does not exist. Parquet reuses
+    * this application's last [[countRows]] when it covered exactly the
+    * table's current files (as [[Lineage.doneSet]]'s count does in a
+    * restart), so that answer runs no job.
+    */
+  def tableRows(spark: SparkSession, table: String): Option[Long] =
+    scala.util.Try(countRows(spark, table)).toOption
+
   /** Drop a table (compaction staging cleanup). */
   def drop(spark: SparkSession, table: String): Unit
 
@@ -151,10 +175,23 @@ final class ParquetTableIO(root: String = "") extends TableIO {
     if (root.isEmpty) table else s"$root/$table"
 
   override def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(path(table))
+    spark.read.parquet(paths(spark, table): _*)
 
   override def read(spark: SparkSession, table: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(path(table))
+    spark.read.schema(schema).parquet(paths(spark, table): _*)
+
+  /** What a read of `table` passes to Spark: its directory, or, for a
+    * nested `_`-prefixed sidecar, its data files. Spark ignores a path
+    * named `_…` (and warns that all paths were ignored) though it still
+    * lists it. A missing sidecar passes its directory, so its read fails
+    * as a missing table's does.
+    */
+  private def paths(spark: SparkSession, table: String): Seq[String] = {
+    val files =
+      if (new org.apache.hadoop.fs.Path(path(table)).getName.startsWith("_")) dataFiles(spark, table)
+      else Nil
+    if (files.isEmpty) Seq(path(table)) else files.map(_._1)
+  }
 
   override def write(df: DataFrame, table: String): Unit =
     df.write.mode("overwrite").parquet(path(table))
@@ -178,13 +215,23 @@ final class ParquetTableIO(root: String = "") extends TableIO {
     val rows =
       if (added.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), df.schema)
       else spark.read.schema(df.schema).parquet(added: _*)
-    val tableRows = lastCount(spark, table).get match {
-      case Some((files, n)) if files == before.toSet =>
-        n + (if (added.isEmpty) 0L else spark.read.schema(new StructType()).parquet(added: _*).count())
-      case _ => countRows(spark, table)
-    }
-    Some((rows, tableRows))
+    val rowsAfter = knownCount(spark, table, before)
+      .map(_ + (if (added.isEmpty) 0L else spark.read.schema(new StructType()).parquet(added: _*).count()))
+      .getOrElse(countRows(spark, table))
+    Some((rows, rowsAfter))
   }
+
+  /** None when the table has no data files (it does not exist). */
+  override def tableRows(spark: SparkSession, table: String): Option[Long] = {
+    val files = dataFiles(spark, table)
+    if (files.isEmpty) None
+    else Some(knownCount(spark, table, files).getOrElse(countRows(spark, table)))
+  }
+
+  /** The last [[countRows]]'s count, if it covered exactly `files`. */
+  private def knownCount(spark: SparkSession, table: String,
+      files: Seq[(String, Long, Long)]): Option[Long] =
+    lastCount(spark, table).get.collect { case (covered, n) if covered == files.toSet => n }
 
   /** The table's data files as (path, length, modification time): its
     * directory listing without the `_`/`.`-prefixed entries (the nested

@@ -169,7 +169,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     // a "done" lineage the size of a big restart's bookkeeping: 200k keys —
-    // broadcast-hostile if the plan were a join; fine as a collected InSet
+    // broadcast-hostile if the plan were a join; fine as a collected bitmap
     val nParts = 1 << 20
     val doneLineage = spark.range(200000).select(org.apache.spark.sql.functions.col("id").as("part_key"))
     val docs = Corpus.generate(spark, 8, nPartitions = 2)
@@ -470,6 +470,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       inner.appendCommitted(df, t)
     override def sidecar(t: String, suffix: String) = inner.sidecar(t, suffix)
     override def countRows(sp: SparkSession, t: String) = { counts(t) += 1; inner.countRows(sp, t) }
+    override def tableRows(sp: SparkSession, t: String) = inner.tableRows(sp, t)
     override def drop(sp: SparkSession, t: String): Unit = inner.drop(sp, t)
     override def compact(sp: SparkSession, t: String, n: Int) = inner.compact(sp, t, n)
   }
@@ -562,6 +563,134 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(done.collect().map(_.getLong(0)).toSet == side.map(_.part_key).toSet)
     } finally
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  test("the bitmap resume filter keeps exactly the rows the IN-list filter kept") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.col
+    // 100 keys: not a multiple of 64, so the bitmap's last word is partial
+    val nParts = 100
+    val ids: Seq[String] = (0 until 1500).map(i => s"doc_$i") ++
+      Seq(null, "", "é", "文档-7", "doc-😀", "doc-！")
+    val docs = ids.toDF("doc_id")
+    val keyOf = docs.select(col("doc_id"), Lineage.partKey(col("doc_id"), nParts).as("pk"))
+      .collect().map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
+    assert(keyOf.values.toSet == (0L until nParts).toSet, "test setup: every key, 0 and nParts - 1 included")
+    def kept(df: org.apache.spark.sql.DataFrame): Seq[Option[String]] =
+      df.collect().map(r => Option(r.getString(0))).toSeq.sortBy(_.toString)
+    // the filter before the bitmap, as the reference
+    def inList(keys: Seq[Long]): Seq[Option[String]] =
+      if (keys.isEmpty) kept(docs)
+      else kept(docs.filter(!Lineage.partKey(col("doc_id"), nParts).isInCollection(keys)))
+    val specials = Seq(None, Some("é"), Some("文档-7"), Some("doc-😀")).map(keyOf)
+    val doneSets: Seq[Seq[Long]] = Seq(
+      Nil,
+      0L until nParts,
+      Seq(0L, nParts - 1L),
+      specials,
+      Seq(-1L, -64L, nParts.toLong, nParts + 63L, Long.MinValue, Long.MaxValue),
+      Seq(3L, 63L, 64L, 65L, -5L, 500L, 3L),
+      (0L until nParts by 3) ++ Seq(-3L, 2L * nParts))
+    for (keys <- doneSets) {
+      val viaFilter = kept(Lineage.resumeFilter(docs, keys.toDF("part_key"), nParts))
+      assert(viaFilter == inList(keys), keys)
+      assert(kept(docs.filter(Lineage.notDone(col("doc_id"), keys, nParts))) == inList(keys), keys)
+    }
+    assert(kept(Lineage.resumeFilter(docs, (0L until nParts).toDF("part_key"), nParts)).isEmpty)
+    assert(kept(docs.filter(Lineage.notDone(col("doc_id"), Nil, nParts))).length == ids.length)
+  }
+
+  test("the resume filter's plan does not grow with the done set") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    val nParts = Lineage.defaultParts
+    val docs = Seq("doc_1", "doc_2").toDF("doc_id")
+    def filterExprs(done: org.apache.spark.sql.DataFrame): Int =
+      Lineage.resumeFilter(docs, done, nParts).queryExecution.analyzed.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition.collect { case e => e }.size
+      }.sum
+    val one = filterExprs(Seq(7L).toDF("part_key"))
+    val all = filterExprs(spark.range(nParts).toDF("part_key"))
+    assert(one > 0 && one == all, s"1 key: $one expressions, $nParts keys: $all")
+  }
+
+  /** The sink's data files as (name, length, modification time). */
+  private def sinkListing(out: String): Set[(String, Long, Long)] =
+    new java.io.File(out).listFiles().toSet
+      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .map(f => (f.getName, f.length(), f.lastModified()))
+
+  test("a no-op restart at the default nParts adds no file to the sink and restamps the sidecar") {
+    implicit val s: SparkSession = spark
+    val docs = Corpus.generate(spark, 12, nPartitions = 2)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-noop").toString
+    val out = tmp + "/sink"
+    try {
+      Pipeline.extractToSink(docs, "run-1", out)
+      val files = sinkListing(out)
+      for (runId <- Seq("run-2", "run-3")) {
+        restart(TableIO.parquet, docs, out, runId, Lineage.defaultParts)
+        assert(sinkListing(out) == files, runId)
+        val (side, full) = sidecarAndRederive(out, runId)
+        assert(side == full, runId)
+        assert(side.map(_.n_docs).sum == 12 && side.forall(_.run_id == runId))
+      }
+    } finally
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  test("a resumed run over an empty input with no sink creates the table and an empty sidecar") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val out = tmp + "/sink"
+    try {
+      val (extracted, lineage) = Pipeline.extractToSink(spark.emptyDataset[Doc], "run-0", out,
+        resume = true)
+      assert(spark.read.parquet(out).count() == 0)
+      assert(spark.read.parquet(out).columns.contains("part_key"))
+      assert(spark.read.parquet(out + "/_lineage").count() == 0)
+      assert(extracted.count() == 0 && lineage.count() == 0)
+    } finally
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  test("a restart reads its sidecars without Spark's all-paths-ignored warning") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.col
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val docs = Corpus.generate(spark, 12, nPartitions = 2)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-logs").toString
+    val out = tmp + "/sink"
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = org.apache.logging.log4j.LogManager.getRootLogger.asInstanceOf[Logger]
+    def ignored: Int = lines.toArray.count(_.toString.contains("All paths were ignored"))
+    try {
+      root.addAppender(appender)
+      Pipeline.extractToSink(docs, "run-1", out, Pipeline.Config(), 8)
+      // an appending restart and a no-op one, each reading `_lineage`
+      val firstHalf = docs.toDF().filter(Lineage.partKey(col("doc_id"), 8) < 4).as[Doc]
+      Pipeline.extractToSink(firstHalf, "run-2", tmp + "/half", Pipeline.Config(), 8)
+      restart(TableIO.parquet, docs, tmp + "/half", "run-3", 8)
+      restart(TableIO.parquet, docs, out, "run-4", 8)
+      TableIO.parquet.read(spark, out + "/_lineage", Lineage.schema).collect()
+      assert(ignored == 0, lines.toArray.mkString("\n"))
+      // the appender sees the warning where a read still passes the directory
+      spark.read.parquet(out + "/_lineage").collect()
+      assert(ignored > 0, "the capture saw no warning at all")
+    } finally {
+      root.removeAppender(appender)
+      appender.stop()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    }
   }
 
   test("merged max_doc_id follows Spark's UTF-8 binary order and ignores null ids") {
