@@ -2,7 +2,7 @@ package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import graft.spark.{Ann, Corpus, Dedup, Doc, Lineage, Pipeline, Spans}
+import graft.spark.{Ann, Corpus, Dedup, Doc, ExtractedDoc, Lineage, Pipeline, Spans}
 import org.apache.spark.launcher.JavaModuleOptions
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
@@ -31,6 +31,10 @@ object Diag {
       |  scaling             fresh-JVM N->4N ladders, pipeline and raw probe
       |                      -> DIR/scaling_latest.json, appended to DIR/scaling_history.jsonl
       |  scaling-child <cores> <corpus> <docs> pipeline|raw   one scaling measurement
+      |  kernel <corpus> [passes] [threads]   Spark-free per-document kernel over a
+      |                      parquet corpus's assembled pages (default 10 passes, 4
+      |                      threads): seconds per pass, median of the later half,
+      |                      output digest
       |DIR defaults to BENCH. Environment: SPARK_GRAFT_SF_DIR (tables directory; time,
       |stages, plans), SPARK_GRAFT_CPUS (default: all cores), SPARK_GRAFT_REPS,
       |SPARK_GRAFT_BENCH_DOCS (default 60000), SPARK_GRAFT_BENCH_LADDERS (default
@@ -47,6 +51,9 @@ object Diag {
     case Seq("scaling-child", cores, corpus, docs, mode @ ("pipeline" | "raw"))
         if cores.toIntOption.isDefined && docs.toLongOption.isDefined =>
       Cmd("scaling-child", Seq(cores, corpus, docs, mode), out)
+    case "kernel" +: (rest @ (_ +: counts))
+        if counts.length <= 2 && counts.forall(_.toIntOption.exists(_ > 0)) =>
+      Cmd("kernel", rest, out)
     case _ => throw new IllegalArgumentException(usage)
   }
 
@@ -86,6 +93,8 @@ object Diag {
           reps(3), env.getOrElse("SPARK_GRAFT_BENCH_JVMFLAGS", "").split("\\s+").toSeq.filter(_.nonEmpty))
       case Cmd("scaling-child", Seq(cores, corpus, docs, mode), _) =>
         scalingChild(spark, cores.toInt, corpus, docs.toLong, mode)
+      case Cmd("kernel", corpus +: counts, _) =>
+        kernel(spark, corpus, counts.headOption.fold(10)(_.toInt), counts.lift(1).fold(4)(_.toInt))
       case _ => throw new IllegalArgumentException(usage)
     } finally Queries.releaseCaches(spark)
   }
@@ -430,22 +439,91 @@ object Diag {
         val n = Pipeline.extract(ds)(spark).count()
         (n, (System.nanoTime() - t0) / 1e9)
       case "raw" =>
-        val htmls = ds.collect().map(d => Spans.assembleHtml(d.spans))
-        val opts = graft.algo.Options()
-        val next = new AtomicInteger(0)
-        val threads = Seq.fill(cores)(new Thread(() => {
-          var i = next.getAndIncrement()
-          while (i < htmls.length) {
-            Spans.extractFromHtml(s"d$i", htmls(i), "https://corpus.example/doc.html", opts)
-            i = next.getAndIncrement()
-          }
-        }))
+        val pages = ds.collect().zipWithIndex.map { case (d, i) => (s"d$i", Spans.assembleHtml(d.spans)) }
         val t0 = System.nanoTime()
-        threads.foreach(_.start())
-        threads.foreach(_.join())
-        (htmls.length.toLong, (System.nanoTime() - t0) / 1e9)
+        kernelPass(pages, cores, graft.algo.Options())
+        (pages.length.toLong, (System.nanoTime() - t0) / 1e9)
     }
     require(n == docs, s"$mode measured $n of $docs docs")
     println(f"DOCS_PER_SEC=${n / seconds}%.2f")
+  }
+
+  // ------------------------------------------------------------- kernel
+
+  /** One pass of the per-document kernel outside Spark: `threads` threads
+    * take one (doc_id, html) page at a time. The outputs in page order.
+    */
+  def kernelPass(pages: IndexedSeq[(String, String)], threads: Int,
+      opts: graft.algo.Options): Array[ExtractedDoc] = {
+    val cfg = Pipeline.Config()
+    val out = new Array[ExtractedDoc](pages.length)
+    val next = new AtomicInteger(0)
+    val ts = Seq.fill(threads)(new Thread(() => {
+      var i = next.getAndIncrement()
+      while (i < pages.length) {
+        out(i) = Spans.extractFromHtml(pages(i)._1, pages(i)._2, cfg.baseUrl, opts, cfg.maxHtmlChars)
+        i = next.getAndIncrement()
+      }
+    }))
+    ts.foreach(_.start())
+    ts.foreach(_.join())
+    out
+  }
+
+  /** SHA-256 of one output row's fields, first 8 bytes — the row hash of
+    * the perfbench sink digest, so [[outputDigest]] of a corpus variant
+    * can be read against the digest `perfbench/expected.json` records.
+    */
+  def docHash(d: ExtractedDoc): Long = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    def int(i: Int): Unit = md.update(java.nio.ByteBuffer.allocate(4).putInt(i).array())
+    def str(s: String): Unit =
+      if (s == null) md.update(0.toByte)
+      else {
+        val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        md.update(1.toByte)
+        int(b.length)
+        md.update(b)
+      }
+    Seq(d.doc_id, d.status, d.error, d.title, d.byline, d.dir, d.lang, d.excerpt,
+      d.site_name, d.published_time).foreach(str)
+    int(d.text_length)
+    val spans = if (d.spans == null) Nil else d.spans
+    int(spans.length)
+    spans.foreach { s => str(s.kind); str(s.text); str(s.media_ref); int(s.order) }
+    java.nio.ByteBuffer.wrap(md.digest(), 0, 8).getLong
+  }
+
+  /** Order-independent digest of output rows: count and the wrapping sum
+    * of their [[docHash]]es, as `<count>-<sum in hex>`.
+    */
+  def outputDigest(docs: Seq[ExtractedDoc]): String =
+    f"${docs.length}-${docs.iterator.map(docHash).sum}%016x"
+
+  /** `passes` timed passes of [[kernelPass]] over the assembled pages of a
+    * parquet corpus of [[Doc]]s (the Submit input; perfbench writes one per
+    * workload variant), with the Pipeline's default options. Prints the
+    * seconds of each pass, the median of the later half (the first passes
+    * still run partly interpreted), and the output digest, which must be
+    * the same on every pass.
+    */
+  def kernel(spark: SparkSession, corpus: String, passes: Int, threads: Int): Unit = {
+    import spark.implicits._
+    val pages = spark.read.parquet(corpus).as[Doc].collect().sortBy(_.doc_id)
+      .map(d => (d.doc_id, Spans.assembleHtml(d.spans))).toIndexedSeq
+    val opts = graft.algo.Options(charThreshold = Pipeline.Config().charThreshold)
+    val digests = mutable.LinkedHashSet[String]()
+    val secs = (1 to passes).map { pass =>
+      val t0 = System.nanoTime()
+      val out = kernelPass(pages, threads, opts)
+      val s = (System.nanoTime() - t0) / 1e9
+      digests += outputDigest(out)
+      println(f"[diag] kernel pass=$pass docs=${pages.length} threads=$threads wall=$s%.3f s")
+      s
+    }
+    val tail = secs.drop(passes / 2)
+    println(f"[diag] kernel tail_median=${median(tail)}%.3f s over passes ${passes / 2 + 1}..$passes " +
+      f"iqr=${iqr(tail)}%.3f s digest=${digests.mkString(",")}")
+    require(digests.size == 1, s"kernel passes disagree: ${digests.mkString(", ")}")
   }
 }

@@ -87,7 +87,7 @@ final class Cleaner(dom: Dom, opts: Options,
           signature.contains("robots-nocontent") || signature.contains("whats-next")
         val isSupplemental = signature.contains("supplemental")
         if (isExplicitNoContent || isSupplemental) {
-          val tlen = trimmedTextLength(dom, c)
+          val tlen = trimmedTextLength(dom, c, cap = if (isSupplemental) 1200 else 500)
           if (isSupplemental) {
             if (tlen <= 1200 || linkDensity(c) >= 0.2) dom.remove(c)
           } else if (tlen <= 500) {
@@ -213,7 +213,7 @@ final class Cleaner(dom: Dom, opts: Options,
       // "advertising" = 11, "advertisement" = 13 — length probe before the
       // per-div text build (every div of every doc walks through here)
       if (dom.parent(d) != -1 && {
-            val tl = trimmedTextLength(dom, d); tl == 11 || tl == 13
+            val tl = trimmedTextLength(dom, d, cap = 13); tl == 11 || tl == 13
           }) {
         val text = sTrim(innerText(dom, d)).toLowerCase
         if ((text == "advertising" || text == "advertisement") &&
@@ -391,7 +391,7 @@ final class Cleaner(dom: Dom, opts: Options,
   private def splitElement(element: Int, path: ArrayBuffer[Int], index: Int): (Int, Int) = {
     def shell(of: Int): Int = {
       val e = dom.newElement(dom.tag(of))
-      if (dom.attrs(of) != null) dom.attrs(e) = dom.attrs(of).clone()
+      if (dom.attrs(of) != null) dom.setAttrs(e, dom.attrs(of).clone())
       e
     }
     val beforeClone = shell(element)
@@ -814,7 +814,7 @@ final class Cleaner(dom: Dom, opts: Options,
       if (dom.parent(div) != -1 && (dom.parent(div) != -1) &&
           !hasAncestorTag(dom, div, "table", 0) &&
           Select.selectFirst(dom, div, "img, picture, figure, video, iframe, object, embed, table, pre, code, ul, ol, blockquote") == -1) {
-        val tlen = trimmedTextLength(dom, div)
+        val tlen = trimmedTextLength(dom, div, cap = 90)
         if (tlen > 0 && tlen <= 90 &&
             sel(div, "p").length <= 4 && sel(div, "a").length >= 2 &&
             linkDensity(div) >= 0.2)
@@ -862,7 +862,7 @@ final class Cleaner(dom: Dom, opts: Options,
           !hasAncestorTag(dom, list, "figure", 0) && !hasAncestorTag(dom, list, "table", 0)) {
         val items = dom.childElements(list)
         if (items.size == 1 && dom.tag(items(0)) == "li" && sel(list, "a").length == 1) {
-          val tlen = trimmedTextLength(dom, list)
+          val tlen = trimmedTextLength(dom, list, cap = 90)
           if (tlen > 0 && tlen <= 90) {
             val prev = prevElementSibling(list)
             val next = nextElementSibling(list)
@@ -918,7 +918,7 @@ final class Cleaner(dom: Dom, opts: Options,
       val note = notes(i)
       if (dom.parent(note) != -1 && (dom.parent(note) != -1) &&
           Select.selectFirst(dom, note, "img, picture, figure, video, iframe, object, embed, table") == -1) {
-        val tlen = trimmedTextLength(dom, note)
+        val tlen = trimmedTextLength(dom, note, cap = 80)
         if (tlen > 0 && tlen <= 80) {
           val text = sTrim(innerText(dom, note))
           val lower = text.toLowerCase

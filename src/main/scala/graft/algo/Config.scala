@@ -95,21 +95,25 @@ object Config {
   * that surface is fixed at the reference defaults: [[Config.NTopCandidates]]
   * top candidates, [[Config.videos]] as the allowed-embed pattern, class
   * cleaning and JSON-LD metadata always on, no link-density modifier.
+  * `withContentHtml` asks for [[Result.contentHtml]]: the fixture tools
+  * compare it, and the Spark path stores spans only, so it is off by
+  * default.
   */
 final case class Options(
     charThreshold: Int = Config.DefaultCharThreshold,
-    classesToPreserve: Seq[String] = Nil)
+    classesToPreserve: Seq[String] = Nil,
+    withContentHtml: Boolean = false)
 
-/** Extraction result mirroring ReadabilityResult (Swift:3-37), content as
-  * the cleaned article DOM root (span/HTML serialization applied by the
-  * caller).
+/** Extraction result mirroring ReadabilityResult (Swift:3-37): the
+  * cleaned article as spans, and as HTML when [[Options.withContentHtml]]
+  * asked for it.
   */
 final case class Result(
     title: String,
     byline: Option[String],
     dir: Option[String],
     lang: Option[String],
-    contentHtml: String,
+    contentHtml: Option[String],
     spans: IndexedSeq[graft.html.Serialize.Span],
     textContent: String,
     excerpt: Option[String],

@@ -56,20 +56,21 @@ object DomOps {
   /** Code-point length of innerText WITHOUT building the string —
     * called per node in scoring/cleanup loops, so this is the hottest
     * path in the engine; allocation here throttles 32-way scaling.
+    * Capped like [[trimmedTextLength]]: `min(length, cap + 1)`.
     */
-  def textLength(dom: Dom, id: Int): Int = {
-    // state packed in a long: low 32 = count, bit 32 = lastWs, bit 33 = anyContent
+  def textLength(dom: Dom, id: Int, cap: Int = Int.MaxValue): Int = {
     var count = 0
     var lastWs = true // leading trim
     var pendingSpace = false
+    var over = false // count > cap: every later char only adds to it
     def walk(node: Int): Unit = {
       var c = dom.firstChild(node)
-      while (c != -1) {
+      while (c != -1 && !over) {
         dom.kind(c) match {
           case Dom.Text =>
             val s = dom.text(c)
             var i = 0
-            while (i < s.length) {
+            while (i < s.length && !over) {
               val ch = s.charAt(i)
               if (Dom.isWhitespace(ch)) {
                 if (!lastWs) pendingSpace = true
@@ -79,6 +80,7 @@ object DomOps {
                 // code-point counting: skip low surrogate
                 if (!Character.isLowSurrogate(ch)) count += 1
                 lastWs = false
+                over = count > cap
               }
               i += 1
             }
@@ -92,9 +94,10 @@ object DomOps {
         c = dom.nextSib(c)
       }
     }
-    if (dom.kind(id) == Dom.Text) return charLen(Dom.normalizeWhitespace(dom.text(id)))
+    if (dom.kind(id) == Dom.Text)
+      return math.min(charLen(Dom.normalizeWhitespace(dom.text(id))), cap.toLong + 1).toInt
     walk(id)
-    count
+    if (over) cap + 1 else count
   }
 
   /** True iff the subtree's text is entirely Swift-whitespace (the
@@ -125,20 +128,25 @@ object DomOps {
 
   /** Code-point length of sTrim(innerText(…)) — normalized, then Swift
     * whitespace (incl. U+00A0) trimmed at both ends — allocation-free.
+    * The walk stops once the count passes `cap` and answers `cap + 1`, so
+    * the result is `min(length, cap + 1)`: a threshold probe passes the
+    * largest length it distinguishes and never walks a long subtree to
+    * its end.
     */
-  def trimmedTextLength(dom: Dom, id: Int): Int = {
+  def trimmedTextLength(dom: Dom, id: Int, cap: Int = Int.MaxValue): Int = {
     var count = 0
     var started = false // any non-swift-ws content emitted yet (leading trim)
     var lastWs = true
     var pending = 0 // normalized chars not yet counted (trailing ws candidates)
+    var over = false // count > cap: every later char only adds to it
     def walk(node: Int): Unit = {
       var c = dom.firstChild(node)
-      while (c != -1) {
+      while (c != -1 && !over) {
         dom.kind(c) match {
           case Dom.Text =>
             val s = dom.text(c)
             var i = 0
-            while (i < s.length) {
+            while (i < s.length && !over) {
               val ch = s.charAt(i)
               if (Dom.isWhitespace(ch)) {
                 if (started && !lastWs) pending += 1 // collapsed space, maybe trailing
@@ -154,6 +162,7 @@ object DomOps {
                 if (Character.isLowSurrogate(ch)) count -= 1
                 started = true
                 lastWs = false
+                over = count > cap
               }
               i += 1
             }
@@ -168,9 +177,10 @@ object DomOps {
         c = dom.nextSib(c)
       }
     }
-    if (dom.kind(id) == Dom.Text) return charLen(sTrim(Dom.normalizeWhitespace(dom.text(id))))
+    if (dom.kind(id) == Dom.Text)
+      return math.min(charLen(sTrim(Dom.normalizeWhitespace(dom.text(id)))), cap.toLong + 1).toInt
     walk(id)
-    count
+    if (over) cap + 1 else count
   }
 
   /** innerText when the caller only cares about short strings: returns
@@ -509,7 +519,7 @@ object DomOps {
     * — Mozilla _setNodeTag clones, same observable result).
     */
   def setNodeTag(dom: Dom, id: Int, t: String): Int = {
-    dom.tag(id) = t
+    dom.setTag(id, t)
     id
   }
 }

@@ -14,7 +14,8 @@ import scala.jdk.CollectionConverters._
 object FixtureRunner {
 
   val fixtureRoot = "/root/reference/Tests/ReadabilityTests/Resources"
-  val mozillaOptions: Options = Options(charThreshold = 500, classesToPreserve = Seq("caption"))
+  val mozillaOptions: Options =
+    Options(charThreshold = 500, classesToPreserve = Seq("caption"), withContentHtml = true)
   val fakeBaseUrl = "http://fakehost/test/index.html"
 
   /** Per-fixture metadata assertion matrix for test-pages, parsed from the
@@ -76,7 +77,7 @@ object FixtureRunner {
         FixtureResult(name, spansMatch = false, List(s"status=$status $error"), None, 0, 0, status)
       case Readability.Ok(result) =>
         if (sys.env.contains("GRAFT_DUMP")) {
-          Files.writeString(Paths.get(s"/tmp/graft_out_$name.html"), result.contentHtml)
+          Files.writeString(Paths.get(s"/tmp/graft_out_$name.html"), result.contentHtml.get)
           Files.writeString(Paths.get(s"/tmp/graft_exp_$name.html"), expectedHtml)
         }
         val exp = expectedSpans(expectedHtml)
@@ -204,7 +205,7 @@ object FixtureRunner {
       Readability.parse(html, args(2), mozillaOptions) match {
         case Readability.Ok(r) =>
           Files.writeString(outDir.resolve("source.html"), html)
-          Files.writeString(outDir.resolve("expected.html"), r.contentHtml)
+          Files.writeString(outDir.resolve("expected.html"), r.contentHtml.get)
           def j(v: Option[String]): String =
             v.map(s => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
               .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t") + "\"")

@@ -897,7 +897,7 @@ final class Grab(
         // retagging non-exception tags to div
         val toAppend = dom.cloneSubtree(sibling)
         if (!Config.alterToDivExceptions.contains(dom.tag(toAppend)))
-          dom.tag(toAppend) = "div"
+          dom.setTag(toAppend, "div")
         if (sibling == topCandidate && leadingElements.nonEmpty) {
           var pi = leadingElements.length - 1
           while (pi >= 0) {

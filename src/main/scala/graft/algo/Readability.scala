@@ -90,7 +90,10 @@ object Readability {
       lastClone = clone
       lastCloneSource = content
       lastCloneFlags = flags
-      textLength(dom, clone)
+      // only `>= charThreshold` is read of an accepted pass, and a failed
+      // one is shorter than the cap, so the walk stops past it (the
+      // inspection report keeps the full length)
+      textLength(dom, clone, cap = if (Inspect.enabled) Int.MaxValue else opts.charThreshold)
     }
 
     val grab = new Grab(dom, opts, title, acceptanceTextLength, siteCtx)
@@ -213,7 +216,7 @@ object Readability {
         dom.appendChild(contentRoot, inner)
       }
     }
-    val contentHtml = Serialize.html(dom, contentRoot)
+    val contentHtml = if (opts.withContentHtml) Some(Serialize.html(dom, contentRoot)) else None
     val spans = Serialize.spans(dom, contentRoot).toIndexedSeq
 
     // 14. byline merge (M5) + byline site rules — uses the byline of the

@@ -354,7 +354,7 @@ object SiteRules {
       // length probe first: this compares EVERY div's subtree text on every
       // doc, and the string build was a measured allocation hotspot
       if (dom.parent(candidate) != -1 &&
-          trimmedTextLength(dom, candidate) == 36 &&
+          trimmedTextLength(dom, candidate, cap = 36) == 36 &&
           sTrim(innerText(dom, candidate)).toLowerCase ==
             "advertising inread invented by teads")
         dom.remove(candidate)
@@ -875,7 +875,7 @@ object SiteRules {
       // cheap structural + length probes first: this runs for every <p> of
       // every doc, and normText materializes the subtree text
       if (dom.parent(p) != -1 &&
-          DomOps.trimmedTextLength(dom, p) == 31 &&
+          DomOps.trimmedTextLength(dom, p, cap = 31) == 31 &&
           Select.selectFirst(dom, p, "a[href*=disqus.com]") != -1 &&
           normText(dom, p).equalsIgnoreCase("blog comments powered by disqus"))
         dom.remove(p)
@@ -1861,7 +1861,7 @@ object SiteRules {
   private def nyTimesCollectionHighlights(articleContent: Int, ctx: Ctx): Unit = {
     val dom = ctx.dom
     for (section <- Select.select(dom, articleContent, "section#collection-highlights-container"))
-      dom.tag(section) = "div"
+      dom.setTag(section, "div")
     for (container <- Select.select(dom, articleContent, "div#collection-highlights-container")) {
       val kids = dom.childElements(container)
       if (kids.nonEmpty && dom.tag(kids(0)) == "div") {
@@ -1950,7 +1950,7 @@ object SiteRules {
   private def yahooStoryContainer(articleContent: Int, ctx: Ctx): Unit = {
     val dom = ctx.dom
     for (section <- Select.select(dom, articleContent, "section#mediacontentstory")) {
-      dom.tag(section) = "div"
+      dom.setTag(section, "div")
       if (Option(dom.attr(section, "itemscope")).getOrElse("").isEmpty)
         dom.setAttr(section, "itemscope", "")
       if (Option(dom.attr(section, "itemtype")).getOrElse("").isEmpty)

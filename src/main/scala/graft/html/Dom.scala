@@ -48,6 +48,7 @@ final class Dom(initialCapacity: Int = 256) {
     n = 0
     htmlEl = -1; headEl = -1; bodyEl = -1
     baseHref = null
+    presence.clear(); summarized = 0; epoch += 1
     val id = alloc() // re-establish the document node at id 0
     kind(id) = Dom.Document
   }
@@ -209,6 +210,7 @@ final class Dom(initialCapacity: Int = 256) {
   def hasAttr(id: Int, name: String): Boolean = attr(id, name) != null
 
   def setAttr(id: Int, name: String, value: String): Unit = {
+    if (id < summarized) presence.addAttr(name, value)
     val a = attrs(id)
     if (a != null) {
       var i = 0
@@ -220,6 +222,18 @@ final class Dom(initialCapacity: Int = 256) {
       na(a.length) = name; na(a.length + 1) = value
       attrs(id) = na
     } else attrs(id) = Array(name, value)
+  }
+
+  /** Replace a node's whole flat attribute array (null = none). */
+  def setAttrs(id: Int, a: Array[String]): Unit = {
+    attrs(id) = a
+    if (id < summarized) presence.addAttrs(a)
+  }
+
+  /** Retag an element in place (attributes and children kept). */
+  def setTag(id: Int, t: String): Unit = {
+    tag(id) = t
+    if (id < summarized) presence.add(Presence.tagKey(t))
   }
 
   def removeAttr(id: Int, name: String): Unit = {
@@ -236,6 +250,36 @@ final class Dom(initialCapacity: Int = 256) {
       }
       i += 2
     }
+  }
+
+  // ----------------------------------------------------- presence summary
+
+  /** What any node of this arena has carried since [[reset]]: tags,
+    * attribute names, attribute (name, value) pairs and class tokens, as
+    * [[Presence]] keys.
+    * It only grows, so it answers "definitely absent" and nothing else —
+    * enough for [[Select]] to skip a walk that cannot match. Slots below
+    * `summarized` are folded in; later ones are folded in lazily by
+    * [[summary]], so parsing and cloning pay nothing per node. Every write
+    * of `tag`/`attrs` to a folded slot goes through [[setTag]],
+    * [[setAttrs]] or [[setAttr]], which add the new values.
+    */
+  private val presence = new Presence
+  private var summarized = 0
+  /** Counts [[reset]]s, so [[restore]] can tell a snapshot of another document. */
+  private var epoch = 0
+
+  /** The presence summary, caught up with every node allocated so far. */
+  def summary: Presence = {
+    while (summarized < n) {
+      val id = summarized
+      if (kind(id) == Element) {
+        presence.add(Presence.tagKey(tag(id)))
+        presence.addAttrs(attrs(id))
+      }
+      summarized += 1
+    }
+    presence
   }
 
   def className(id: Int): String = { val v = attr(id, "class"); if (v == null) "" else v }
@@ -470,7 +514,7 @@ final class Dom(initialCapacity: Int = 256) {
     val copy = kind(id) match {
       case Dom.Element =>
         val e = newElement(tag(id))
-        if (attrs(id) != null) attrs(e) = attrs(id).clone()
+        if (attrs(id) != null) setAttrs(e, attrs(id).clone())
         e
       case Dom.Text => newText(text(id))
       case Dom.Data => newData(text(id))
@@ -491,7 +535,7 @@ final class Dom(initialCapacity: Int = 256) {
     val copy = src.kind(id) match {
       case Dom.Element =>
         val e = newElement(src.tag(id))
-        if (src.attrs(id) != null) attrs(e) = src.attrs(id).clone()
+        if (src.attrs(id) != null) setAttrs(e, src.attrs(id).clone())
         e
       case Dom.Text => newText(src.text(id))
       case Dom.Data => newData(src.text(id))
@@ -517,12 +561,14 @@ final class Dom(initialCapacity: Int = 256) {
   private var snapBuf: DomSnapshot = null
 
   def snapshot(): DomSnapshot = {
+    // every state saved here must be in the summary when it is restored
+    summary
     if (snapBuf == null || snapBuf.kind.length < n) {
       val cap = math.max(n, if (snapBuf == null) 0 else snapBuf.kind.length * 2)
       snapBuf = DomSnapshot(0, new Array[Byte](cap), new Array[String](cap),
         new Array[Int](cap), new Array[Int](cap), new Array[Int](cap),
         new Array[Int](cap), new Array[Int](cap),
-        new Array[Array[String]](cap), new Array[String](cap), -1, -1, -1, null)
+        new Array[Array[String]](cap), new Array[String](cap), -1, -1, -1, null, -1)
     }
     val s = snapBuf
     System.arraycopy(kind, 0, s.kind, 0, n)
@@ -536,13 +582,16 @@ final class Dom(initialCapacity: Int = 256) {
     while (i < n) { s.attrs(i) = if (attrs(i) != null) attrs(i).clone() else null; i += 1 }
     System.arraycopy(text, 0, s.text, 0, n)
     val out = s.copy(n = n, htmlEl = htmlEl, headEl = headEl, bodyEl = bodyEl,
-      baseHref = baseHref)
+      baseHref = baseHref, epoch = epoch)
     snapBuf = out // keep the filled buffer as the pool entry
     out
   }
 
   def restore(s: DomSnapshot): Unit = {
     n = s.n
+    // the summary already holds the snapshot's states (summarized then);
+    // slots from s.n on are reallocated, so they must be folded in again
+    summarized = if (s.epoch == epoch) math.min(summarized, s.n) else 0
     if (kind.length < s.n) {
       kind = new Array[Byte](s.n); tag = new Array[String](s.n)
       parent = new Array[Int](s.n); firstChild = new Array[Int](s.n)
@@ -578,7 +627,8 @@ final case class DomSnapshot(
     htmlEl: Int,
     headEl: Int,
     bodyEl: Int,
-    baseHref: String)
+    baseHref: String,
+    epoch: Int)
 
 object Dom {
   final val Document: Byte = 0

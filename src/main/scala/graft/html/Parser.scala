@@ -524,7 +524,7 @@ private final class Parser(input: String, private val dom: Dom) {
   private def cloneShallow(el: Int): Int = {
     val c = dom.newElement(dom.tag(el))
     val a = dom.attrs(el)
-    dom.attrs(c) = if (a == null) null else java.util.Arrays.copyOf(a, a.length)
+    dom.setAttrs(c, if (a == null) null else java.util.Arrays.copyOf(a, a.length))
     c
   }
 
@@ -749,16 +749,16 @@ private final class Parser(input: String, private val dom: Dom) {
       case "html" =>
         if (dom.htmlEl == -1) {
           ensureHtml()
-          dom.attrs(dom.htmlEl) = attrArray()
+          dom.setAttrs(dom.htmlEl, attrArray())
         } else if (dom.attrs(dom.htmlEl) == null) {
-          dom.attrs(dom.htmlEl) = attrArray()
+          dom.setAttrs(dom.htmlEl, attrArray())
         }
         if (mode == 0) mode = 1
         return
       case "head" =>
         if (dom.headEl == -1) {
           ensureHead()
-          dom.attrs(dom.headEl) = attrArray()
+          dom.setAttrs(dom.headEl, attrArray())
           if (mode == 0) mode = 1
           stack += dom.headEl
         }
@@ -766,7 +766,7 @@ private final class Parser(input: String, private val dom: Dom) {
       case "body" =>
         if (dom.bodyEl == -1) {
           ensureBody()
-          dom.attrs(dom.bodyEl) = attrArray()
+          dom.setAttrs(dom.bodyEl, attrArray())
         } else {
           ensureBody()
           // merge attrs onto existing body (spec)
@@ -968,7 +968,7 @@ private final class Parser(input: String, private val dom: Dom) {
 
   private def insertElementInto(parent: Int, name: String): Int = {
     val el = dom.newElement(name)
-    dom.attrs(el) = attrArray()
+    dom.setAttrs(el, attrArray())
     dom.appendChild(parent, el)
     if (voidTags.contains(name)) {
       if (name == "base" && dom.baseHref == null) {
@@ -1000,7 +1000,7 @@ private final class Parser(input: String, private val dom: Dom) {
 
   private def insertElement(name: String): Int = {
     val el = dom.newElement(name)
-    dom.attrs(el) = attrArray()
+    dom.setAttrs(el, attrArray())
     appendNode(el, fosterOk = !tableAllowed.contains(name) && !tableContext.contains(name) && name != "table")
     stack += el
     el
@@ -1008,7 +1008,7 @@ private final class Parser(input: String, private val dom: Dom) {
 
   private def insertLeaf(name: String): Int = {
     val el = dom.newElement(name)
-    dom.attrs(el) = attrArray()
+    dom.setAttrs(el, attrArray())
     appendNode(el, fosterOk = true)
     el
   }

@@ -1,6 +1,7 @@
 package graft.html
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** Tiny CSS-selector engine over the arena DOM — exactly the feature set
   * the reference's call sites use (survey of `select(...)` callers,
@@ -24,11 +25,26 @@ object Select {
   /** revSteps: last simple selector first (match target, then ancestors);
     * childFlag(i) binds revSteps(i) to its ancestor step i+1; rootChild
     * anchors the top-most step as a DIRECT child of the query root
-    * (leading ">" selector).
+    * (leading ">" selector). `needs` holds the [[Presence]] keys of every
+    * tag, `#id`, `.class`, `[attr]` name and `[attr=value]` pair the group
+    * requires: a match needs each of them on some node of the arena.
     */
-  final case class Compiled(revSimples: Array[Simple], revChild: Array[Boolean], rootChild: Boolean)
+  final case class Compiled(revSimples: Array[Simple], revChild: Array[Boolean], rootChild: Boolean) {
+    val needs: Array[Int] = revSimples.flatMap { s =>
+      Option(s.tag).map(Presence.tagKey) ++
+        // an empty #id equals the "" that idAttr answers for a node
+        // without one, and an empty class token can match whitespace
+        Option(s.id).filter(_.nonEmpty).map(Presence.valueKey("id", _)) ++
+        s.classes.filter(_.nonEmpty).map(Presence.classKey) ++
+        s.attrs.map(a => Presence.attrKey(a._1)) ++
+        s.attrs.collect { case (name, '=', v) => Presence.valueKey(name, v) }
+    }.distinct
+  }
 
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, Array[Compiled]]()
+
+  /** Every selector string compiled so far in this JVM. */
+  private[html] def compiledSelectors: Seq[String] = cache.keySet.asScala.toSeq
 
   def compile(sel: String): Array[Compiled] = {
     // lock-free fast path: computeIfAbsent takes the bin lock even for
@@ -210,9 +226,31 @@ object Select {
     false
   }
 
+  /** True when no comma group can match anywhere in the arena: each one
+    * needs a key the presence summary has never seen (or has no step).
+    */
+  private[html] def cannotMatch(dom: Dom, groups: Array[Compiled]): Boolean = {
+    val seen = dom.summary
+    var g = 0
+    while (g < groups.length) {
+      val c = groups(g)
+      if (c.revSimples.length > 0) {
+        val needs = c.needs
+        var k = 0
+        while (k < needs.length && seen.contains(needs(k))) k += 1
+        if (k == needs.length) return false
+      }
+      g += 1
+    }
+    true
+  }
+
+  private val NoIds = new Array[Int](0)
+
   /** All elements under root (root excluded) matching sel, doc order. */
   def select(dom: Dom, root: Int, sel: String): Array[Int] = {
     val compiled = compile(sel)
+    if (cannotMatch(dom, compiled)) return NoIds
     // primitive result: select runs inside every per-document rule loop and
     // ArrayBuffer[Int] boxes each id (measured allocation site)
     var arr = new Array[Int](16)
@@ -231,6 +269,7 @@ object Select {
 
   def selectFirst(dom: Dom, root: Int, sel: String): Int = {
     val compiled = compile(sel)
+    if (cannotMatch(dom, compiled)) return -1
     var cur = dom.nextInTree(root, root)
     while (cur != -1) {
       if (dom.kind(cur) == Dom.Element && matchesAny(dom, cur, compiled, root)) return cur

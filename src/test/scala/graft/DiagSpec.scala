@@ -61,6 +61,31 @@ class DiagSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(intercept[IllegalArgumentException](Diag.parse(bad)).getMessage.startsWith("usage: graft.Diag"))
   }
 
+  test("command line: kernel takes a corpus and at most two positive counts") {
+    assert(Diag.parse(Seq("kernel", "c")) == Diag.Cmd("kernel", Seq("c"), Paths.get("BENCH")))
+    assert(Diag.parse(Seq("kernel", "c", "3", "2")).args == Seq("c", "3", "2"))
+    for (bad <- Seq(Seq("kernel"), Seq("kernel", "c", "0"), Seq("kernel", "c", "x"),
+        Seq("kernel", "c", "1", "2", "3")))
+      assert(intercept[IllegalArgumentException](Diag.parse(bad)).getMessage.startsWith("usage: graft.Diag"))
+  }
+
+  test("kernel prints each pass, the later-half median and the digest of the pool's outputs") {
+    val corpus = scratch().resolve("corpus").toString
+    graft.spark.Corpus.generate(spark, 40, seed = 3L, nPartitions = 2).write.parquet(corpus)
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Diag.run(spark, Diag.parse(Seq("kernel", corpus, "3", "2")), Map.empty))
+    val lines = out.toString("UTF-8").linesIterator.toSeq
+    assert(lines.count(_.startsWith("[diag] kernel pass=")) == 3)
+    assert(lines.exists(_.contains("docs=40 threads=2")))
+    val pages = (0L until 40L).map { i =>
+      (graft.spark.Corpus.docId(i), graft.spark.Spans.assembleHtml(graft.spark.Corpus.docHtml(3L, i, 0.001)._2))
+    }
+    val digest = Diag.outputDigest(Diag.kernelPass(pages, 1, graft.algo.Options()).toSeq)
+    assert(digest.startsWith("40-"))
+    assert(lines.last.contains("tail_median=") && lines.last.contains("over passes 2..3") &&
+      lines.last.endsWith(s"digest=$digest"), lines.last)
+  }
+
   test("auditFlags: cartesian products anywhere, sort-merge joins only where a broadcast is expected") {
     val cartesian =
       """== Physical Plan ==

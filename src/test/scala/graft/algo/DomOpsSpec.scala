@@ -78,6 +78,47 @@ class DomOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("capped textLength and trimmedTextLength == min(uncapped, cap + 1) on golden, generator and edge pages") {
+    val golden = {
+      val root = java.nio.file.Paths.get(getClass.getResource("/golden").toURI)
+      val s = java.nio.file.Files.list(root)
+      try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+        .map(d => java.nio.file.Files.readString(d.resolve("source.html")))
+      finally s.close()
+    }
+    val generator = (0L until 12L).map(i => graft.spark.Corpus.docHtml(5L, i, 0.0)._1)
+    // Swift whitespace that normalization keeps (nbsp, NEL, ogham, hair,
+    // line separator, ideographic) at the edges, between words and around
+    // surrogate pairs, so the count crosses each cap on every kind of char
+    val ws = Seq("\u00a0", "\u0085", "\u1680", "\u200a", "\u2028", "\u3000")
+    val edges = for (w <- ws; n <- Seq(1, 11, 13, 30, 31, 36, 37)) yield
+      s"<div>$w $w<p>${"ab" * (n / 2)}$w${"😀" * (n % 3)}<b>x$w</b>$w</p>$w${"c" * n} $w</div>"
+    val pages = golden ++ generator ++ (samples ++ edges).map("<body>" + _ + "</body>")
+    var checked = 0
+    for (html <- pages) {
+      val d = Parser.parse(html)
+      var cur: Int = d.document
+      while (cur != -1) {
+        if (d.kind(cur) == Dom.Element || d.kind(cur) == Dom.Text) {
+          val full = DomOps.trimmedTextLength(d, cur)
+          for (cap <- Seq(0, 1, 2, 11, 13, 31, 36, 80, 90, 500, 1200, full - 1, full, full + 1) if cap >= 0) {
+            assert(DomOps.trimmedTextLength(d, cur, cap) == math.min(full, cap + 1),
+              s"trimmed, cap $cap on '${DomOps.innerText(d, cur).take(80)}' (length $full)")
+            checked += 1
+          }
+          val norm = DomOps.textLength(d, cur)
+          for (cap <- Seq(0, 1, 13, 90, 500, norm - 1, norm, norm + 1) if cap >= 0) {
+            assert(DomOps.textLength(d, cur, cap) == math.min(norm, cap + 1),
+              s"normalized, cap $cap on '${DomOps.innerText(d, cur).take(80)}' (length $norm)")
+            checked += 1
+          }
+        }
+        cur = d.nextInTree(cur, d.document)
+      }
+    }
+    assert(checked > 30000, s"$checked checks")
+  }
+
   test("isSwiftWs fast path agrees with Character.getType over the whole BMP") {
     var c = 0
     while (c <= 0xFFFF) {

@@ -19,10 +19,19 @@ import java.nio.file.{Files, Path, Paths}
   *  - `hermitian-list-prune`: the Hermitian list prune;
   *  - `site-rule-gates-negative`: every needle only split by block markup,
   *    in upper case or across whitespace runs, where the rules must leave
-  *    the article unchanged.
+  *    the article unchanged;
+  *  - `empty-text-retry`: the longest failed attempt holds only a header
+  *    equal to the title (an `id` keeps it from the grab's title-duplicate
+  *    removal), so the chosen article is empty once the title-matched
+  *    headers go, and the retry re-parses the next attempt's stored HTML
+  *    (`Grab.Attempt.html`) and keeps its two paragraphs. Without the retry
+  *    the article text is empty;
+  *  - `content-too-short` (in `failing`): every attempt cleans down to no
+  *    text, so there is no best attempt and the page fails.
   *
   * expected.html is the recorded `Readability.parse` content HTML, compared
-  * byte for byte and as the span sequence FixtureRunner derives from it.
+  * byte for byte and as the span sequence FixtureRunner derives from it. A
+  * failing page has only source.html and its recorded status and error.
   */
 class GoldenPagesSpec extends AnyFunSuite {
 
@@ -70,10 +79,24 @@ class GoldenPagesSpec extends AnyFunSuite {
       "AORAKI   /   MOUNT    COOK stands",
       "<p>Speakers of Māori</p>",
       "IF N ORTHONORMAL EIGENVECTORS",
-      "For an arbitrary complex valued vector")))
+      "For an arbitrary complex valued vector")),
+    "empty-text-retry" -> (Seq("The Quiet Harbour At The End Of The Long Northern Road"), Seq(
+      "<p>A short note, kept by the retry pass.</p><p>A second line of the same short note.</p>")))
+
+  /** Pages whose extraction fails: the recorded (status, error). */
+  private val failing: Map[String, (String, String)] = Map(
+    "content-too-short" -> ("content_too_short", "actual=0 threshold=500"))
 
   test("every golden page has its fired-branch expectations") {
-    assert(pages.map(_.getFileName.toString).toSet == fired.keySet)
+    assert(pages.map(_.getFileName.toString).toSet == fired.keySet ++ failing.keySet)
+  }
+
+  for ((name, (status, error)) <- failing.toSeq.sortBy(_._1)) {
+    test(s"golden page $name: extraction fails with the recorded status") {
+      val source = Files.readString(root.resolve(name).resolve("source.html"))
+      assert(Readability.parse(source, FixtureRunner.fakeBaseUrl, FixtureRunner.mozillaOptions) ==
+        Readability.Failed(status, error))
+    }
   }
 
   for (name <- fired.keys.toSeq.sorted) {
@@ -83,7 +106,7 @@ class GoldenPagesSpec extends AnyFunSuite {
       val expected = Files.readString(dir.resolve("expected.html"))
       val content = Readability.parse(source, FixtureRunner.fakeBaseUrl,
           FixtureRunner.mozillaOptions) match {
-        case Readability.Ok(r) => r.contentHtml
+        case Readability.Ok(r) => r.contentHtml.get
         case Readability.Failed(status, error) => fail(s"$status: $error")
       }
       assert(content == expected)

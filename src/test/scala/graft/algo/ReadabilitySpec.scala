@@ -47,10 +47,11 @@ class ReadabilitySpec extends AnyFunSuite {
          |</td><td>sidebar note</td></tr>
          |<tr><td>footer cell</td><td>x</td></tr></table>
          |</body></html>""".stripMargin
-    Readability.parse(html, "https://example.org/a.html") match {
+    Readability.parse(html, "https://example.org/a.html", Options(withContentHtml = true)) match {
       case Readability.Ok(r) =>
-        assert(r.contentHtml.startsWith("<div id=\"readability-page-1\" class=\"page\">"))
-        val inner = r.contentHtml.stripPrefix("<div id=\"readability-page-1\" class=\"page\">")
+        val contentHtml = r.contentHtml.get
+        assert(contentHtml.startsWith("<div id=\"readability-page-1\" class=\"page\">"))
+        val inner = contentHtml.stripPrefix("<div id=\"readability-page-1\" class=\"page\">")
         // with the wrap the cell fragment is nested under an anonymous div
         assert(!inner.trim.startsWith("<td"),
           s"cell-rooted fragment leaked: ${inner.take(120)}")
